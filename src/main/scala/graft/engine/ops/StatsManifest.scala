@@ -98,6 +98,9 @@ object StatsManifest {
     */
   def appendBatchStats(spark: SparkSession, scanPath: String,
       manifestRoot: String, batchDir: String, statsCols: Seq[String]): Unit = {
+    // no integral column, no ledger: return before the listing and the
+    // schema-inference job the read below would cost every batch
+    if (statsCols.isEmpty) return
     // an empty micro-batch leaves no parquet files under its dir —
     // nothing to stat. Checked EXPLICITLY (r12 self-review): a blanket
     // AnalysisException catch would also swallow real scan failures,

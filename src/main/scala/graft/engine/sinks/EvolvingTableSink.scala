@@ -181,14 +181,21 @@ final class EvolvingTableSink(
     * alone could not guarantee that; SURVEY.md §7.4's idempotent
     * per-batch overwrite). Backfills (no batchId) write under negative
     * ids from their own sequence, never touching the streaming marker.
+    *
+    * `beforeCommit` runs after the data is written and before the commit
+    * line and the sidecar; if it throws, the batch stays uncommitted and
+    * its replay rewrites it. The streaming processor waits there for the
+    * batch's dead-letter write.
     */
-  def write(df: DataFrame, batchId: Long = -1L): Boolean = {
+  def write(df: DataFrame, batchId: Long = -1L,
+      beforeCommit: () => Unit = () => ()): Boolean = {
     val meta = readMeta()
     if (meta.exists(m => batchId >= 0 && batchId <= m.lastBatchId)) return false
     val merged = meta.map(m => evolve(m.schema, df.schema)).getOrElse(df.schema)
     val effectiveId =
       if (batchId >= 0) batchId else meta.map(_.nextBackfillId).getOrElse(-1L)
     appendDir(df, merged, effectiveId)
+    beforeCommit()
     // Snapshot commit log (r12): one `<seq> <effectiveId>` line per
     // COMMITTED write, the Iceberg-snapshot stand-in that makes as-of
     // reads real (backfills interleave with streaming ids in COMMIT

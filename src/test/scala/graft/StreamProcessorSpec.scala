@@ -1,9 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, ExecutionException}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.ingest.{EventSchema, JsonArrayBatchParser, Router}
@@ -19,6 +24,26 @@ import graft.fixtures.EventGen
   */
 class StreamProcessorSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.engine.Sessions.local(4, "graft-test")
+
+  /** (valid, dead-letter) counts of the batch path over `path`. */
+  private def batchCounts(path: String): (Long, Long) = {
+    val routed = Router.withReason(
+      new JsonArrayBatchParser().parse(Sources.textDir(spark, path)))
+    (routed.filter(s"${EventSchema.DeadLetterReason} IS NULL").count(),
+      routed.filter(s"${EventSchema.DeadLetterReason} IS NOT NULL").count())
+  }
+
+  /** Move one freshly generated batch file into `inDir` atomically, so a
+    * running stream never lists it half written.
+    */
+  private def dropFile(gen: EventGen, root: Path, inDir: Path, events: Int): Path = {
+    val staged = gen.writeBatchFiles(root.resolve("staging"), nBatches = 1, eventsPerBatch = events).head
+    Files.createDirectories(inDir)
+    Files.move(staged, inDir.resolve(staged.getFileName), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def oneFilePerTrigger(inDir: Path): DataFrame =
+    spark.readStream.option("maxFilesPerTrigger", 1).text(inDir.toString)
 
   test("streams batch files to bronze and dead-letter sinks, exactly once across restarts") {
     val root = Files.createTempDirectory("graft_stream")
@@ -136,5 +161,110 @@ class StreamProcessorSpec extends AnyFunSuite {
     // purchases carry product_id, page_views do not
     assert(back.filter("event_type = 'purchase' AND product_id IS NULL").count() == 0)
     assert(back.filter("event_type = 'page_view' AND product_id IS NOT NULL").count() == 0)
+  }
+
+  test("lastBatchCounts equals the batch-path counts of each micro-batch's file") {
+    val root = Files.createTempDirectory("graft_stream_counts")
+    val inDir = root.resolve("in")
+    val gen = new EventGen(seed = 31L, corruptionChance = 0.3, invalidSchemaChance = 0.2)
+    val proc = new StreamProcessor(
+      new EvolvingTableSink(root.resolve("bronze").toString),
+      new ParquetAppendSink(root.resolve("dead").toString),
+      checkpointLocation = root.resolve("ckpt").toString,
+      trigger = Trigger.ProcessingTime("100 milliseconds"))
+    Files.createDirectories(inDir)
+    val q = proc.start(oneFilePerTrigger(inDir))
+    try {
+      val seen = (1 to 4).map { i =>
+        val file = dropFile(gen, root, inDir, events = 10 * i)
+        q.processAllAvailable()
+        val want = batchCounts(file.toString)
+        assert(proc.lastBatchCounts == want, s"file $i")
+        want
+      }
+      assert(seen.exists(_._1 > 0) && seen.exists(_._2 > 0),
+        "fixture should produce both classes")
+    } finally q.stop()
+  }
+
+  test("every micro-batch job carries the query's job group, two jobs per batch") {
+    val root = Files.createTempDirectory("graft_stream_jobs")
+    val inDir = root.resolve("in")
+    val gen = new EventGen(seed = 41L, corruptionChance = 0.3, invalidSchemaChance = 0.2)
+    gen.writeBatchFiles(inDir, nBatches = 3, eventsPerBatch = 20)
+    val bronze = new EvolvingTableSink(root.resolve("bronze").toString)
+    val proc = new StreamProcessor(
+      bronze, new ParquetAppendSink(root.resolve("dead").toString),
+      checkpointLocation = root.resolve("ckpt").toString,
+      trigger = Trigger.ProcessingTime("100 milliseconds"))
+    // (job id, job group, micro-batch id) of every job started meanwhile
+    val jobs = new ConcurrentLinkedQueue[(Int, String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
+        jobs.add((j.jobId, prop("spark.jobGroup.id"), prop("streaming.sql.batchId")))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val runId =
+      try {
+        val q = proc.start(oneFilePerTrigger(inDir))
+        try q.processAllAvailable() finally q.stop()
+        q.runId.toString
+      } finally {
+        GraftListenerBus.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    val seen = jobs.asScala.toSeq
+    val stray = seen.filter(_._2 != runId)
+    assert(stray.isEmpty, s"jobs outside the stream's job group $runId: $stray")
+    // the bronze write and the dead-letter write; the event schema has no
+    // integral column, so no stats ledger job and no ledger dir
+    val perBatch = seen.groupBy(_._3).map { case (b, js) => b -> js.size }
+    assert(perBatch == Map("0" -> 2, "1" -> 2, "2" -> 2), s"jobs per batch: $perBatch")
+    assert(!Files.exists(root.resolve("bronze").resolve("_manifest")))
+    assert(bronze.read(spark).count() == batchCounts(inDir.toString)._1)
+  }
+
+  test("a failed dead-letter write blocks the bronze commit; the replay lands once") {
+    val root = Files.createTempDirectory("graft_stream_dlq_fail")
+    val inDir = root.resolve("in")
+    val gen = new EventGen(seed = 53L, corruptionChance = 0.3, invalidSchemaChance = 0.2)
+    val bronze = new EvolvingTableSink(root.resolve("bronze").toString)
+    val dead = new ParquetAppendSink(root.resolve("dead").toString)
+    val ckpt = root.resolve("ckpt").toString
+    def run(deadSink: ParquetAppendSink): Unit = {
+      val q = new StreamProcessor(bronze, deadSink, checkpointLocation = ckpt,
+        trigger = Trigger.ProcessingTime("100 milliseconds")).start(oneFilePerTrigger(inDir))
+      try q.processAllAvailable() finally q.stop()
+    }
+    val first = dropFile(gen, root, inDir, events = 30)
+    run(dead)
+    val (firstValid, _) = batchCounts(first.toString)
+    assert(bronze.isCommitted(0))
+
+    // batch 1 meets a dead-letter path that is a regular file
+    val blocked = Files.write(root.resolve("dead_blocked"), Array[Byte](1))
+    val badSink = new ParquetAppendSink(blocked.toString)
+    val direct = intercept[Throwable](badSink.write(spark.range(1).toDF()))
+    dropFile(gen, root, inDir, events = 30)
+    val e = intercept[StreamingQueryException](run(badSink))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(!chain.exists(c => c.isInstanceOf[ExecutionException] || c.isInstanceOf[CompletionException]),
+      s"the future's wrapper leaked: ${chain.map(_.getClass.getName)}")
+    assert(chain.exists(c => c.getClass == direct.getClass && c.getMessage == direct.getMessage),
+      s"expected the sink's own ${direct.getClass.getName}, got ${chain.map(_.getClass.getName)}")
+    assert(!bronze.isCommitted(1))
+    assert(bronze.read(spark).count() == firstValid, "batch 1 rows must not be visible")
+
+    // the path is fixed: the restart replays batch 1 exactly once
+    run(dead)
+    assert(bronze.isCommitted(1))
+    val (allValid, allDead) = batchCounts(inDir.toString)
+    val back = bronze.read(spark)
+    assert(back.count() == allValid)
+    assert(back.select("event_id").distinct().count() == allValid)
+    assert(spark.read.parquet(dead.path).count() == allDead)
   }
 }
