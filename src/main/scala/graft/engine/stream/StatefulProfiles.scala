@@ -21,7 +21,8 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * micro-batch shuffles once on the key; updates are point lookups.
   * `transformWithState` requires the RocksDB state store provider — the
   * caller sets `spark.sql.streaming.stateStore.providerClass` before
-  * starting the query (see `Ingest.withRocksDbState`).
+  * starting the query (see `Ingest.withRocksDbState`, which the RocksDB
+  * roundtrips wrap around their `Ingest.memoryRoundtrip` call).
   */
 object StatefulProfiles {
 

@@ -1,7 +1,15 @@
 package graft.queries
 
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.engine.ingest.{EventSchema, JsonArrayBatchParser, Router}
+import graft.engine.sinks.{EvolvingTableSink, ParquetAppendSink}
+import graft.engine.stream.{StatefulProfiles, StreamProcessor, Upsert, WindowedAggs}
 
 /** Oracle-checked queries for the ingestion path: the same literal batch
   * strings flow through the engine's JsonArrayBatchParser + Router on the
@@ -161,6 +169,13 @@ object Ingest extends QueryPack {
     ("2024-01-01 00:20:00", 9L), // click with no impression
     ("2024-01-01 01:45:00", 4L)) // cross-batch match for ad 4
 
+  /** The ad fixtures as the DuckDB CTEs imp(ts, ad_id), clk(ts, ad_id). */
+  private val duckAdEvents: String =
+    Seq("imp" -> impEvents, "clk" -> clickEvents).map { case (name, evs) =>
+      val rows = evs.map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }
+      s"$name(ts, ad_id) AS (VALUES ${rows.mkString(", ")})"
+    }.mkString(",\n        ")
+
   /** (ts, event_type) rows for the UPDATE-output-mode roundtrip, two
     * micro-batches (first 4, then 3). The second batch re-touches the
     * (00:00, click) window, so the sink receives that group TWICE with
@@ -250,21 +265,30 @@ object Ingest extends QueryPack {
     * and 8 state partitions (keyed state is partition-count invariant;
     * the 100x streaming scale-out story).
     */
-  private def withStreamingPartitions[A](s: org.apache.spark.sql.SparkSession)(f: => A): A = {
+  private def withStreamingPartitions[A](s: SparkSession)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(ndKey)
     s.conf.set(key,
       s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("1"))
-    // Every micro-batch costs ~0.5s of fixed orchestration in this runtime
-    // (incremental re-plan + state commit + WAL), so each processAllAvailable
-    // call's trailing no-data batch roughly doubles a roundtrip's cost while
-    // computing nothing. Disable them for the roundtrips; queries whose
-    // APPEND output only materializes when the watermark advances (session /
-    // two-level windows, outer joins) carry an explicit third flush DATA
-    // batch instead — the flush batch executes under the watermark the
-    // previous batch advanced, which is exactly what the no-data batch did.
+    // Every micro-batch costs ~0.5s of fixed orchestration in this runtime:
+    // addBatch ~0.4s (state load + commit + the operator, ~0.25s inside
+    // tasks, the rest physical planning and job turnaround outside them),
+    // incremental queryPlanning ~0.1s, WAL + offsets ~0.08s. No conf
+    // moves that floor — state-store maintenance interval, retained
+    // batches, RocksDB with join state format 3, codegen, compression
+    // codec and a checksum-free local FS all measured as noise — so batch
+    // COUNT is the only lever. Each processAllAvailable call's trailing
+    // no-data batch would roughly double a roundtrip's cost while
+    // computing nothing, so they are disabled here; queries whose APPEND
+    // output only materializes when the watermark advances (session /
+    // two-level windows, outer joins) carry an explicit flush DATA batch
+    // instead — it executes under the watermark the previous batch
+    // advanced, which is exactly what the no-data batch did. Per-batch
+    // planning / addBatch / WAL / offsets / state-commit figures for the
+    // declared roundtrips come from
+    // `python3 perfbench/run.py --workload stream_roundtrips --trace 1`.
     s.conf.set(ndKey, "false")
     try f finally {
       s.conf.set(key, prev)
@@ -278,7 +302,7 @@ object Ingest extends QueryPack {
     * the conf to the query is enough; other streaming queries keep the
     * default HDFS-backed store.
     */
-  private def withRocksDbState[A](s: org.apache.spark.sql.SparkSession)(f: => A): A = {
+  private def withRocksDbState[A](s: SparkSession)(f: => A): A = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = s.conf.getOption(key)
     s.conf.set(key,
@@ -288,6 +312,73 @@ object Ingest extends QueryPack {
       case None => s.conf.unset(key)
     }
   }
+
+  /** The memory-sink roundtrip harness: start `df` on a memory sink under
+    * a fresh name (inside `withStreamingPartitions`), drive it with
+    * `steps`, stop it, and return the sink's rows. Rows a query needs in
+    * its first micro-batch are added before the call — added after
+    * start, the trigger thread races the adds and can split them into
+    * separate batches. The sink's temp view is dropped on the way out,
+    * also on failure: the frame resolved from it keeps reading the sink,
+    * and a long-lived session would otherwise collect one view per run.
+    */
+  private def memoryRoundtrip(s: SparkSession, df: DataFrame, outputMode: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
+      steps: StreamingQuery => Unit): DataFrame = {
+    val name = s"graft_rt_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+    try {
+      withStreamingPartitions(s) {
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode(outputMode).trigger(trigger).start()
+        try steps(q) finally q.stop()
+      }
+      s.table(name)
+    } finally s.catalog.dropTempView(name)
+  }
+
+  /** Wait for a self-terminating (AvailableNow) query to finish. A query
+    * still running after `timeoutMs` is stopped and the call throws: its
+    * sinks hold a partial result that must not be read as the answer.
+    */
+  private[graft] def awaitDrained(q: StreamingQuery, timeoutMs: Long): Unit =
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"streaming query ${q.id} still running after $timeoutMs ms; stopped it")
+    }
+
+  /** One StreamProcessor pass: drain every file pending in `in` into the
+    * sinks with Trigger.AvailableNow, resuming from checkpoint `chk`.
+    */
+  private def drainFiles(s: SparkSession, in: Path, sink: EvolvingTableSink,
+      dl: ParquetAppendSink, chk: String, schema: StructType = EventSchema.schema): Unit =
+    awaitDrained(new StreamProcessor(sink, dl, schema, checkpointLocation = chk,
+      trigger = Trigger.AvailableNow()).start(s.readStream.text(in.toString)), 120000L)
+
+  /** The CDC roundtrips' drive loop: `start(updates, tableDir, checkpoint)`
+    * builds the query over a (user_id, status, seq) stream under a fresh
+    * temp dir, and each of `upsertBatches` lands as one micro-batch.
+    * Returns the table dir.
+    */
+  private def upsertRoundtrip(s: SparkSession)(
+      start: (DataFrame, String, String) => StreamingQuery): String = {
+    import s.implicits._
+    val in = MemoryStream[(Long, String, Long)](s)
+    val root = Files.createTempDirectory("graft_upsert_rt_")
+    // the returned table is read lazily, so it is reclaimed at JVM exit
+    graft.engine.util.Fs.deleteOnExit(root)
+    val dir = s"$root/table"
+    withStreamingPartitions(s) {
+      val q = start(in.toDF().toDF("user_id", "status", "seq"), dir, s"$root/chk")
+      try upsertBatches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+    dir
+  }
+
+  /** An ad-event (ts_s, ad_id) stream with its parsed event time. */
+  private def adStream(m: MemoryStream[(String, Long)]): DataFrame =
+    m.toDF().toDF("ts_s", "ad_id").withColumn("ts", to_timestamp(col("ts_s")))
 
   def defs: Map[String, QueryDef] = Map(
     // Throughput probe for the core pipeline: 200 producer batches x 100
@@ -339,10 +430,6 @@ object Ingest extends QueryPack {
     "ingest_e2e_roundtrip" -> QueryDef(
       (s, _) => {
         import java.nio.charset.StandardCharsets
-        import java.nio.file.Files
-        import org.apache.spark.sql.streaming.Trigger
-        import graft.engine.sinks.{EvolvingTableSink, ParquetAppendSink}
-        import graft.engine.stream.StreamProcessor
         val root = Files.createTempDirectory("graft_e2e_")
         // the returned DataFrame reads the sink lazily, so the tree can
         // only be reclaimed at JVM exit (each invocation makes one; the
@@ -356,15 +443,10 @@ object Ingest extends QueryPack {
         val sink = new EvolvingTableSink(root.resolve("bronze").toString)
         val dl = new ParquetAppendSink(root.resolve("dead").toString)
         val chk = root.resolve("chk").toString
-        def run(): Unit = {
-          val sp = new StreamProcessor(sink, dl, checkpointLocation = chk,
-            trigger = Trigger.AvailableNow())
-          val q = sp.start(s.readStream.text(in.toString))
-          q.awaitTermination(120000L)
-          if (q.isActive) q.stop()
-        }
-        run() // first pass: parse -> route -> bronze + dead letters
-        run() // restart on the same checkpoint: replay must be a no-op
+        // first pass: parse -> route -> bronze + dead letters; then a
+        // restart on the same checkpoint, whose replay must be a no-op
+        drainFiles(s, in, sink, dl, chk)
+        drainFiles(s, in, sink, dl, chk)
         // Maintenance leg (r13, the gap the reference README names at
         // README.md:74-80): two tiny BACKFILL appends guarantee >= 3
         // snapshots regardless of how AvailableNow batched the files,
@@ -429,11 +511,6 @@ object Ingest extends QueryPack {
     "ingest_evolution_roundtrip" -> QueryDef(
       (s, _) => {
         import java.nio.charset.StandardCharsets
-        import java.nio.file.Files
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.types.StructType
-        import graft.engine.sinks.{EvolvingTableSink, ParquetAppendSink}
-        import graft.engine.stream.StreamProcessor
         val root = Files.createTempDirectory("graft_evo_")
         graft.engine.util.Fs.deleteOnExit(root)
         val in = Files.createDirectories(root.resolve("in"))
@@ -442,13 +519,7 @@ object Ingest extends QueryPack {
         val chk = root.resolve("chk").toString
         val v1Schema = StructType(
           EventSchema.schema.fields.filterNot(_.name == "product_id"))
-        def run(schema: StructType): Unit = {
-          val sp = new StreamProcessor(sink, dl, schema,
-            checkpointLocation = chk, trigger = Trigger.AvailableNow())
-          val q = sp.start(s.readStream.text(in.toString))
-          q.awaitTermination(120000L)
-          if (q.isActive) q.stop()
-        }
+        def run(schema: StructType): Unit = drainFiles(s, in, sink, dl, chk, schema)
         def land(tag: String, bs: Seq[String]): Unit =
           bs.zipWithIndex.foreach { case (b, i) =>
             Files.write(in.resolve(f"batch_${tag}_$i%03d.json"),
@@ -517,27 +588,17 @@ object Ingest extends QueryPack {
     // append-mode/late-data specs.
     "stream_tumbling_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, String)]
+        import s.implicits._
+        val in = MemoryStream[(String, String)](s)
         val src = in.toDF().toDF("ts_s", "event_type")
           .withColumn("ts", to_timestamp(col("ts_s")))
           .withColumn("value", lit(1.0))
-        val agg = graft.engine.stream.WindowedAggs.tumblingCounts(src)
-        val qn = s"tumbling_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").start()
-          try {
-            in.addData(streamEvents.take(4))
-            q.processAllAvailable()
-            in.addData(streamEvents.drop(4))
-            q.processAllAvailable()
-          } finally q.stop()
+        memoryRoundtrip(s, WindowedAggs.tumblingCounts(src), "complete") { q =>
+          in.addData(streamEvents.take(4))
+          q.processAllAvailable()
+          in.addData(streamEvents.drop(4))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(Q.epochUs(col("window_start")).as("ws_us"),
             col("event_type"), col("n").cast("long").as("n"))
           .orderBy(col("ws_us"), col("event_type"))
@@ -558,34 +619,25 @@ object Ingest extends QueryPack {
     // construction (as sessionize_events does for the batch path).
     "stream_session_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, Long)]
+        import s.implicits._
+        val in = MemoryStream[(String, Long)](s)
         val src = in.toDF().toDF("ts_s", "user_id")
           .withColumn("ts", to_timestamp(col("ts_s")))
-        val agg = graft.engine.stream.WindowedAggs
+        val agg = WindowedAggs
           .userSessions(src, gap = "30 minutes", watermark = "2 hours")
-        val qn = s"session_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            in.addData(sessionEvents.take(3))
-            q.processAllAvailable()
-            // batch 2 extends batch-1 sessions (the cross-micro-batch
-            // state merge this roundtrip exists to prove) and carries the
-            // watermark-flush row; batch 3 (one more filtered flush row)
-            // executes under the watermark batch 2 advanced and finalizes
-            // every real session — no-data batches are disabled
-            in.addData(sessionEvents.drop(3) :+ (("2024-01-05 00:00:00", -1L)))
-            q.processAllAvailable()
-            in.addData(Seq(("2024-01-05 01:00:00", -1L)))
-            q.processAllAvailable()
-          } finally q.stop()
+        memoryRoundtrip(s, agg, "append") { q =>
+          in.addData(sessionEvents.take(3))
+          q.processAllAvailable()
+          // batch 2 extends batch-1 sessions (the cross-micro-batch
+          // state merge this roundtrip exists to prove) and carries the
+          // watermark-flush row; batch 3 (one more filtered flush row)
+          // executes under the watermark batch 2 advanced and finalizes
+          // every real session — no-data batches are disabled
+          in.addData(sessionEvents.drop(3) :+ (("2024-01-05 00:00:00", -1L)))
+          q.processAllAvailable()
+          in.addData(Seq(("2024-01-05 01:00:00", -1L)))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .where(col("user_id") >= 0)
           .select(col("user_id"),
             Q.epochUs(col("session_start")).as("start_us"),
@@ -622,27 +674,17 @@ object Ingest extends QueryPack {
     // copy of each. Oracle: SELECT DISTINCT over the same literal rows.
     "stream_dedup_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, Long)]
+        import s.implicits._
+        val in = MemoryStream[(String, Long)](s)
         val src = in.toDF().toDF("ts_s", "event_id")
           .withColumn("ts", to_timestamp(col("ts_s")))
-        val deduped = graft.engine.stream.WindowedAggs
-          .dedupWithinWatermark(src, watermark = "1 hour")
-        val qn = s"dedup_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = deduped.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            in.addData(dedupEvents.take(4)) // contains an in-batch duplicate
-            q.processAllAvailable()
-            in.addData(dedupEvents.drop(4)) // re-sends an earlier event
-            q.processAllAvailable()
-          } finally q.stop()
+        val deduped = WindowedAggs.dedupWithinWatermark(src, watermark = "1 hour")
+        memoryRoundtrip(s, deduped, "append") { q =>
+          in.addData(dedupEvents.take(4)) // contains an in-batch duplicate
+          q.processAllAvailable()
+          in.addData(dedupEvents.drop(4)) // re-sends an earlier event
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(col("event_id"), Q.epochUs(col("ts")).as("ts_us"))
           .orderBy(col("event_id"))
       },
@@ -666,13 +708,9 @@ object Ingest extends QueryPack {
     // from the same literal corpus.
     "stream_dedup_minhash_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.stream.StatefulProfiles
         graft.functions.GraftFunctions.register(s)
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(Long, String)]
+        import s.implicits._
+        val in = MemoryStream[(Long, String)](s)
         val sig = in.toDF().toDF("doc_id", "text")
           .selectExpr("doc_id", s"${Portable.sparkWords("lower(text)")} AS ws")
           .where("size(ws) >= 3")
@@ -687,20 +725,14 @@ object Ingest extends QueryPack {
             (0 until Portable.MinHashK).map(i => s"element_at(sig, ${i + 1}) AS s$i"): _*)
         val hits = StatefulProfiles.bandOwners(
           Dedup.minHashBandsFrom(sig).as[StatefulProfiles.BandDoc])
-        val qn = s"mh_dedup_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          withRocksDbState(s) {
-            in.addData(minhashDocs.take(4)) // pre-start: one batch 0
-            val q = hits.toDF().writeStream.format("memory").queryName(qn)
-              .outputMode("update").start()
-            try {
-              q.processAllAvailable()
-              in.addData(minhashDocs.drop(4)) // cross-batch copy + in-batch pair
-              q.processAllAvailable()
-            } finally q.stop()
+        in.addData(minhashDocs.take(4)) // pre-start: one batch 0
+        withRocksDbState(s) {
+          memoryRoundtrip(s, hits.toDF(), "update") { q =>
+            q.processAllAvailable()
+            in.addData(minhashDocs.drop(4)) // cross-batch copy + in-batch pair
+            q.processAllAvailable()
           }
         }
-        s.table(qn)
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bands"), min(col("owner")).as("first_owner"))
           .selectExpr("doc_id", "CAST(n_bands AS BIGINT) AS n_bands",
@@ -736,12 +768,8 @@ object Ingest extends QueryPack {
     // the oracle re-derives every verdict from the literal corpus.
     "stream_curate_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.sinks.ParquetAppendSink
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = java.nio.file.Files.createTempDirectory("graft_curate_rt_")
+        import s.implicits._
+        val root = Files.createTempDirectory("graft_curate_rt_")
         graft.engine.util.Fs.deleteOnExit(root)
         val curated = new ParquetAppendSink(s"$root/curated")
         val rejects = new ParquetAppendSink(s"$root/rejects")
@@ -751,11 +779,11 @@ object Ingest extends QueryPack {
             THEN 'stopword_heavy'
           WHEN length(text) div size(ws) > 8 THEN 'long_words'
           ELSE 'keep' END"""
-        val in = MemoryStream[(Long, String)]
+        val in = MemoryStream[(Long, String)](s)
         withStreamingPartitions(s) {
           in.addData(curateDocs.take(4))
           val q = in.toDF().toDF("doc_id", "text").writeStream
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+            .foreachBatch { (df: DataFrame, _: Long) =>
               val v = df
                 .selectExpr("doc_id", "text",
                   s"${Portable.sparkWords("lower(text)")} AS ws")
@@ -799,41 +827,24 @@ object Ingest extends QueryPack {
     // pairs from the literal rows with a plain range join.
     "stream_join_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val imps = MemoryStream[(String, Long)]
-        val clicks = MemoryStream[(String, Long)]
-        def src(m: MemoryStream[(String, Long)]) = m.toDF().toDF("ts_s", "ad_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-        val joined = graft.engine.stream.WindowedAggs
-          .adAttribution(src(imps), src(clicks))
-        val qn = s"join_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          // initial blocks land BEFORE start so batch 0 is deterministically
-          // ONE micro-batch (added after start, the trigger thread races the
-          // adds and can split them into separate ~0.5s batches)
-          imps.addData(impEvents)        // all impressions up front
-          clicks.addData(clickEvents.take(3))
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            clicks.addData(clickEvents.drop(3)) // ad 4's click, next batch
-            q.processAllAvailable()
-          } finally q.stop()
+        import s.implicits._
+        val imps = MemoryStream[(String, Long)](s)
+        val clicks = MemoryStream[(String, Long)](s)
+        // the initial blocks land before start so batch 0 is one micro-batch
+        imps.addData(impEvents)        // all impressions up front
+        clicks.addData(clickEvents.take(3))
+        val joined = WindowedAggs.adAttribution(adStream(imps), adStream(clicks))
+        memoryRoundtrip(s, joined, "append") { q =>
+          q.processAllAvailable()
+          clicks.addData(clickEvents.drop(3)) // ad 4's click, next batch
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(col("ad_id"), Q.epochUs(col("imp_ts")).as("imp_us"),
             Q.epochUs(col("click_ts")).as("click_us"))
           .orderBy(col("ad_id"), col("imp_us"), col("click_us"))
       },
       Some(s"""
-        WITH imp(ts, ad_id) AS (VALUES ${impEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")}),
-        clk(ts, ad_id) AS (VALUES ${clickEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")})
+        WITH $duckAdEvents
         SELECT i.ad_id AS ad_id, epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         FROM imp i JOIN clk c
           ON i.ad_id = c.ad_id
@@ -848,12 +859,8 @@ object Ingest extends QueryPack {
     // the drain mode must lose and duplicate nothing.
     "stream_availablenow_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import org.apache.spark.sql.streaming.Trigger
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, String)]
+        import s.implicits._
+        val in = MemoryStream[(String, String)](s)
         in.addData(streamEvents) // all pending BEFORE start: drain in one go
         val src = in.toDF().toDF("ts_s", "event_type")
           .withColumn("ts", to_timestamp(col("ts_s")))
@@ -861,15 +868,7 @@ object Ingest extends QueryPack {
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-        val qn = s"avnow_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("complete")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination(60000) finally q.stop()
-        }
-        s.table(qn)
+        memoryRoundtrip(s, agg, "complete", Trigger.AvailableNow())(awaitDrained(_, 60000L))
           .select(Q.epochUs(col("window_start")).as("ws_us"),
             col("event_type"), col("n").cast("long").as("n"))
           .orderBy(col("ws_us"), col("event_type"))
@@ -890,11 +889,8 @@ object Ingest extends QueryPack {
     // re-derives exactly that multiset.
     "stream_update_mode_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, String)]
+        import s.implicits._
+        val in = MemoryStream[(String, String)](s)
         val src = in.toDF().toDF("ts_s", "event_type")
           .withColumn("ts", to_timestamp(col("ts_s")))
         val agg = src
@@ -902,18 +898,12 @@ object Ingest extends QueryPack {
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-        val qn = s"update_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("update").start()
-          try {
-            in.addData(updateEvents.take(4))
-            q.processAllAvailable()
-            in.addData(updateEvents.drop(4))
-            q.processAllAvailable()
-          } finally q.stop()
+        memoryRoundtrip(s, agg, "update") { q =>
+          in.addData(updateEvents.take(4))
+          q.processAllAvailable()
+          in.addData(updateEvents.drop(4))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(Q.epochUs(col("window_start")).as("ws_us"),
             col("event_type"), col("n").cast("long").as("n"))
           .orderBy(col("ws_us"), col("event_type"), col("n"))
@@ -938,29 +928,19 @@ object Ingest extends QueryPack {
     // VALUES left-joined to nation in DuckDB.
     "stream_static_join_roundtrip" -> QueryDef(
       (s, d) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, Long, Long)]
+        import s.implicits._
+        val in = MemoryStream[(String, Long, Long)](s)
         val src = in.toDF().toDF("ts_s", "n_key", "value")
           .withColumn("ts", to_timestamp(col("ts_s")))
         val dim = graft.engine.Tables.nation(s, d)
           .select(col("n_nationkey"), col("n_name"))
-        val enriched = graft.engine.stream.WindowedAggs
-          .staticEnrich(src, dim, "n_key", "n_nationkey")
-        val qn = s"enrich_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = enriched.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            in.addData(enrichEvents.take(3))
-            q.processAllAvailable()
-            in.addData(enrichEvents.drop(3))
-            q.processAllAvailable()
-          } finally q.stop()
+        val enriched = WindowedAggs.staticEnrich(src, dim, "n_key", "n_nationkey")
+        memoryRoundtrip(s, enriched, "append") { q =>
+          in.addData(enrichEvents.take(3))
+          q.processAllAvailable()
+          in.addData(enrichEvents.drop(3))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(Q.epochUs(col("ts")).as("ts_us"), col("n_key"),
             col("n_name"), col("value"))
           .orderBy(col("n_key"), col("ts_us"))
@@ -980,26 +960,16 @@ object Ingest extends QueryPack {
     // to its k = 0,1 window starts and re-derives the same counts.
     "stream_sliding_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, String)]
+        import s.implicits._
+        val in = MemoryStream[(String, String)](s)
         val src = in.toDF().toDF("ts_s", "event_type")
           .withColumn("ts", to_timestamp(col("ts_s")))
-        val agg = graft.engine.stream.WindowedAggs.slidingCounts(src)
-        val qn = s"sliding_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("complete").start()
-          try {
-            in.addData(streamEvents.take(4))
-            q.processAllAvailable()
-            in.addData(streamEvents.drop(4))
-            q.processAllAvailable()
-          } finally q.stop()
+        memoryRoundtrip(s, WindowedAggs.slidingCounts(src), "complete") { q =>
+          in.addData(streamEvents.take(4))
+          q.processAllAvailable()
+          in.addData(streamEvents.drop(4))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .select(Q.epochUs(col("window_start")).as("ws_us"),
             col("event_type"), col("n").cast("long").as("n"))
           .orderBy(col("ws_us"), col("event_type"))
@@ -1021,33 +991,23 @@ object Ingest extends QueryPack {
     // DuckDB re-derives both levels with nested time_bucket aggregates.
     "stream_two_level_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(String, String)]
+        import s.implicits._
+        val in = MemoryStream[(String, String)](s)
         val src = in.toDF().toDF("ts_s", "event_type")
           .withColumn("ts", to_timestamp(col("ts_s")))
-        val agg = graft.engine.stream.WindowedAggs.twoLevelCounts(src)
-        val qn = s"twolevel_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = agg.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            in.addData(streamEvents.take(4))
-            q.processAllAvailable()
-            // batch 2: the remaining real events (merging into open
-            // sub-windows under batch 1's watermark) + the first flush
-            // raising max event time; batch 3 (a second filtered flush
-            // row) then runs under the advanced watermark and finalizes
-            // BOTH state levels — no-data batches are disabled
-            in.addData(streamEvents.drop(4) :+ (("2024-01-05 02:00:00", "zz_flush")))
-            q.processAllAvailable()
-            in.addData(Seq(("2024-01-05 03:00:00", "zz_flush")))
-            q.processAllAvailable()
-          } finally q.stop()
+        memoryRoundtrip(s, WindowedAggs.twoLevelCounts(src), "append") { q =>
+          in.addData(streamEvents.take(4))
+          q.processAllAvailable()
+          // batch 2: the remaining real events (merging into open
+          // sub-windows under batch 1's watermark) + the first flush
+          // raising max event time; batch 3 (a second filtered flush
+          // row) then runs under the advanced watermark and finalizes
+          // BOTH state levels — no-data batches are disabled
+          in.addData(streamEvents.drop(4) :+ (("2024-01-05 02:00:00", "zz_flush")))
+          q.processAllAvailable()
+          in.addData(Seq(("2024-01-05 03:00:00", "zz_flush")))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .where(col("event_type") =!= "zz_flush")
           .select(Q.epochUs(col("window_start")).as("ws_us"),
             col("event_type"), col("n").cast("long").as("n"),
@@ -1076,53 +1036,38 @@ object Ingest extends QueryPack {
     // no-match rows. DuckDB mirrors with a plain LEFT JOIN.
     "stream_left_join_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val imps = MemoryStream[(String, Long)]
-        val clicks = MemoryStream[(String, Long)]
-        def src(m: MemoryStream[(String, Long)]) = m.toDF().toDF("ts_s", "ad_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-        val joined = graft.engine.stream.WindowedAggs
-          .adAttributionOuter(src(imps), src(clicks))
-        val qn = s"ljoin_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          // THREE batches: this roundtrip is the outer-join family's
-          // cross-batch-state witness (the full/right variants stay at
-          // the two-batch eviction minimum). Batch 0 buffers every
-          // impression but holds back ad 4's click; batch 1 delivers it
-          // plus the flush rows — the ad-4 impression must have SURVIVED
-          // in join state across the batch boundary for its matched row
-          // to emit (watermark is still 2023-12-31 23:00 then, so the
-          // 01:45 click is not late). Batch 2 is one filtered flush row
-          // running under the now-advanced watermark: it evicts the
-          // unmatched impressions and emits their null-click rows.
-          imps.addData(impEvents)
-          clicks.addData(clickEvents.take(3))
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
-            clicks.addData(clickEvents.drop(3)) // ad 4: cross-batch match
-            clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
-            q.processAllAvailable()
-            clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
-            q.processAllAvailable()
-          } finally q.stop()
+        import s.implicits._
+        val imps = MemoryStream[(String, Long)](s)
+        val clicks = MemoryStream[(String, Long)](s)
+        val joined = WindowedAggs.adAttributionOuter(adStream(imps), adStream(clicks))
+        // THREE batches: this roundtrip is the outer-join family's
+        // cross-batch-state witness (the full/right variants stay at
+        // the two-batch eviction minimum). Batch 0 buffers every
+        // impression but holds back ad 4's click; batch 1 delivers it
+        // plus the flush rows — the ad-4 impression must have SURVIVED
+        // in join state across the batch boundary for its matched row
+        // to emit (watermark is still 2023-12-31 23:00 then, so the
+        // 01:45 click is not late). Batch 2 is one filtered flush row
+        // running under the now-advanced watermark: it evicts the
+        // unmatched impressions and emits their null-click rows.
+        imps.addData(impEvents)
+        clicks.addData(clickEvents.take(3))
+        memoryRoundtrip(s, joined, "append") { q =>
+          q.processAllAvailable()
+          imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
+          clicks.addData(clickEvents.drop(3)) // ad 4: cross-batch match
+          clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
+          q.processAllAvailable()
+          clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .where(col("ad_id") >= 0)
           .select(col("ad_id"), Q.epochUs(col("imp_ts")).as("imp_us"),
             Q.epochUs(col("click_ts")).as("click_us"))
           .orderBy(col("ad_id"), col("imp_us"), col("click_us"))
       },
       Some(s"""
-        WITH imp(ts, ad_id) AS (VALUES ${impEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")}),
-        clk(ts, ad_id) AS (VALUES ${clickEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")})
+        WITH $duckAdEvents
         SELECT i.ad_id AS ad_id, epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         FROM imp i LEFT JOIN clk c
           ON i.ad_id = c.ad_id
@@ -1136,38 +1081,27 @@ object Ingest extends QueryPack {
     // flush choreography as the left-outer roundtrip.
     "stream_full_join_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val imps = MemoryStream[(String, Long)]
-        val clicks = MemoryStream[(String, Long)]
-        def src(m: MemoryStream[(String, Long)]) = m.toDF().toDF("ts_s", "ad_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-        val i = src(imps).withWatermark("ts", "2 hours")
+        import s.implicits._
+        val imps = MemoryStream[(String, Long)](s)
+        val clicks = MemoryStream[(String, Long)](s)
+        val i = adStream(imps).withWatermark("ts", "2 hours")
           .select(col("ad_id").as("imp_ad_id"), col("ts").as("imp_ts"))
-        val c = src(clicks).withWatermark("ts", "2 hours")
+        val c = adStream(clicks).withWatermark("ts", "2 hours")
           .select(col("ad_id").as("click_ad_id"), col("ts").as("click_ts"))
         val joined = i.join(c,
           expr("""imp_ad_id = click_ad_id AND
                   click_ts >= imp_ts AND
                   click_ts <= imp_ts + INTERVAL 1 HOUR"""), "full_outer")
-        val qn = s"fjoin_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          // two-batch choreography — see the left-outer roundtrip note
-          imps.addData(impEvents)
-          imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
-          clicks.addData(clickEvents)
-          clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
-            q.processAllAvailable()
-          } finally q.stop()
+        // two-batch choreography — see the left-outer roundtrip note
+        imps.addData(impEvents)
+        imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
+        clicks.addData(clickEvents)
+        clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
+        memoryRoundtrip(s, joined, "append") { q =>
+          q.processAllAvailable()
+          clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .where(coalesce(col("imp_ad_id"), lit(0L)) >= 0 &&
             coalesce(col("click_ad_id"), lit(0L)) >= 0)
           .select(
@@ -1177,10 +1111,7 @@ object Ingest extends QueryPack {
           .orderBy(col("ad_id"), col("imp_us"), col("click_us"))
       },
       Some(s"""
-        WITH imp(ts, ad_id) AS (VALUES ${impEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")}),
-        clk(ts, ad_id) AS (VALUES ${clickEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")})
+        WITH $duckAdEvents
         SELECT coalesce(i.ad_id, c.ad_id) AS ad_id,
                epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         FROM imp i FULL OUTER JOIN clk c
@@ -1195,38 +1126,27 @@ object Ingest extends QueryPack {
     // Same flush choreography; DuckDB mirrors with RIGHT JOIN.
     "stream_right_join_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val imps = MemoryStream[(String, Long)]
-        val clicks = MemoryStream[(String, Long)]
-        def src(m: MemoryStream[(String, Long)]) = m.toDF().toDF("ts_s", "ad_id")
-          .withColumn("ts", to_timestamp(col("ts_s")))
-        val i = src(imps).withWatermark("ts", "2 hours")
+        import s.implicits._
+        val imps = MemoryStream[(String, Long)](s)
+        val clicks = MemoryStream[(String, Long)](s)
+        val i = adStream(imps).withWatermark("ts", "2 hours")
           .select(col("ad_id").as("imp_ad_id"), col("ts").as("imp_ts"))
-        val c = src(clicks).withWatermark("ts", "2 hours")
+        val c = adStream(clicks).withWatermark("ts", "2 hours")
           .select(col("ad_id").as("click_ad_id"), col("ts").as("click_ts"))
         val joined = i.join(c,
           expr("""imp_ad_id = click_ad_id AND
                   click_ts >= imp_ts AND
                   click_ts <= imp_ts + INTERVAL 1 HOUR"""), "right_outer")
-        val qn = s"rjoin_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          // two-batch choreography — see the left-outer roundtrip note
-          imps.addData(impEvents)
-          imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
-          clicks.addData(clickEvents)
-          clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
-          val q = joined.writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
-            q.processAllAvailable()
-          } finally q.stop()
+        // two-batch choreography — see the left-outer roundtrip note
+        imps.addData(impEvents)
+        imps.addData(Seq(("2024-01-05 02:00:00", -1L)))
+        clicks.addData(clickEvents)
+        clicks.addData(Seq(("2024-01-05 02:00:00", -2L)))
+        memoryRoundtrip(s, joined, "append") { q =>
+          q.processAllAvailable()
+          clicks.addData(Seq(("2024-01-05 03:00:00", -2L)))
+          q.processAllAvailable()
         }
-        s.table(qn)
           .where(col("click_ad_id") >= 0)
           .select(col("click_ad_id").as("ad_id"),
             Q.epochUs(col("imp_ts")).as("imp_us"),
@@ -1234,10 +1154,7 @@ object Ingest extends QueryPack {
           .orderBy(col("ad_id"), col("imp_us"), col("click_us"))
       },
       Some(s"""
-        WITH imp(ts, ad_id) AS (VALUES ${impEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")}),
-        clk(ts, ad_id) AS (VALUES ${clickEvents
-          .map { case (t, a) => s"(TIMESTAMP '$t', CAST($a AS BIGINT))" }.mkString(", ")})
+        WITH $duckAdEvents
         SELECT c.ad_id AS ad_id,
                epoch_us(i.ts) AS imp_us, epoch_us(c.ts) AS click_us
         FROM imp i RIGHT JOIN clk c
@@ -1252,27 +1169,8 @@ object Ingest extends QueryPack {
     // all exercised. DuckDB re-derives the final state with arg_max.
     "stream_upsert_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(Long, String, Long)]
-        val src = in.toDF().toDF("user_id", "status", "seq")
-        val root = java.nio.file.Files.createTempDirectory("graft_upsert_")
-        graft.engine.util.Fs.deleteOnExit(root)
-        val dir = s"$root/table"
-        withStreamingPartitions(s) {
-          val q = graft.engine.stream.Upsert.stream(
-            src, dir, Seq("user_id"), "seq", s"$root/chk")
-          try {
-            upsertBatches.foreach { b =>
-              in.addData(b)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        graft.engine.stream.Upsert.current(s, dir).get
-          .orderBy(col("user_id"))
+        val dir = upsertRoundtrip(s)(Upsert.stream(_, _, Seq("user_id"), "seq", _))
+        Upsert.current(s, dir).get.orderBy(col("user_id"))
       },
       Some(s"""
         WITH ev(user_id, status, seq) AS (VALUES ${upsertBatches.flatten
@@ -1290,27 +1188,9 @@ object Ingest extends QueryPack {
     // what the oracle computes from the full VALUES list.
     "stream_incr_agg_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(Long, String, Long)]
-        val src = in.toDF().toDF("user_id", "status", "seq")
-        val root = java.nio.file.Files.createTempDirectory("graft_incragg_")
-        graft.engine.util.Fs.deleteOnExit(root)
-        val dir = s"$root/table"
-        withStreamingPartitions(s) {
-          val q = graft.engine.stream.Upsert.streamAggregate(
-            src, dir, Seq("user_id"), Seq("seq"), s"$root/chk")
-          try {
-            upsertBatches.foreach { b =>
-              in.addData(b)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        graft.engine.stream.Upsert.current(s, dir).get
-          .orderBy(col("user_id"))
+        val dir = upsertRoundtrip(s)(
+          Upsert.streamAggregate(_, _, Seq("user_id"), Seq("seq"), _))
+        Upsert.current(s, dir).get.orderBy(col("user_id"))
       },
       Some(s"""
         WITH ev(user_id, status, seq) AS (VALUES ${upsertBatches.flatten
@@ -1329,30 +1209,11 @@ object Ingest extends QueryPack {
     // state by filtering the change log to seq-at-version.
     "stream_timetravel_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[(Long, String, Long)]
-        val src = in.toDF().toDF("user_id", "status", "seq")
-        val root = java.nio.file.Files.createTempDirectory("graft_ttravel_")
-        graft.engine.util.Fs.deleteOnExit(root)
-        val dir = s"$root/table"
-        withStreamingPartitions(s) {
-          val q = graft.engine.stream.Upsert.stream(
-            src, dir, Seq("user_id"), "seq", s"$root/chk")
-          try {
-            upsertBatches.foreach { b =>
-              in.addData(b)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-        val v1 = graft.engine.stream.Upsert.currentVersion(dir).get
+        val dir = upsertRoundtrip(s)(Upsert.stream(_, _, Seq("user_id"), "seq", _))
+        val v1 = Upsert.currentVersion(dir).get
         val v0 = v1 - 1
-        graft.engine.stream.Upsert.at(s, dir, v0).withColumn("version", lit(v0))
-          .unionByName(
-            graft.engine.stream.Upsert.at(s, dir, v1).withColumn("version", lit(v1)))
+        Upsert.at(s, dir, v0).withColumn("version", lit(v0))
+          .unionByName(Upsert.at(s, dir, v1).withColumn("version", lit(v1)))
           .orderBy(col("version"), col("user_id"))
       },
       Some(s"""
@@ -1379,27 +1240,17 @@ object Ingest extends QueryPack {
     // functions over the batch index.
     "stream_tws_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.stream.StatefulProfiles
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[StatefulProfiles.UserValue]
+        import s.implicits._
+        val in = MemoryStream[StatefulProfiles.UserValue](s)
         val profiles = StatefulProfiles.runningProfiles(in.toDS())
-        val qn = s"tws_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          withRocksDbState(s) {
-            val q = profiles.toDF().writeStream.format("memory").queryName(qn)
-              .outputMode("update").start()
-            try {
-              twsBatches.foreach { b =>
-                in.addData(b.map { case (u, v) => StatefulProfiles.UserValue(u, v) })
-                q.processAllAvailable()
-              }
-            } finally q.stop()
+        withRocksDbState(s) {
+          memoryRoundtrip(s, profiles.toDF(), "update") { q =>
+            twsBatches.foreach { b =>
+              in.addData(b.map { case (u, v) => StatefulProfiles.UserValue(u, v) })
+              q.processAllAvailable()
+            }
           }
         }
-        s.table(qn)
           .select(col("user_id"), col("n_batches"), col("n_events"),
             col("sum_value"), col("max_value"))
           .orderBy(col("user_id"), col("n_batches"))
@@ -1432,27 +1283,17 @@ object Ingest extends QueryPack {
     // rows included).
     "stream_tws_map_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.stream.StatefulProfiles
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[StatefulProfiles.TypedEvent]
+        import s.implicits._
+        val in = MemoryStream[StatefulProfiles.TypedEvent](s)
         val countsDs = StatefulProfiles.typeCounts(in.toDS())
-        val qn = s"tws_map_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          withRocksDbState(s) {
-            val q = countsDs.toDF().writeStream.format("memory").queryName(qn)
-              .outputMode("update").start()
-            try {
-              twsMapBatches.foreach { b =>
-                in.addData(b.map { case (u, t) => StatefulProfiles.TypedEvent(u, t) })
-                q.processAllAvailable()
-              }
-            } finally q.stop()
+        withRocksDbState(s) {
+          memoryRoundtrip(s, countsDs.toDF(), "update") { q =>
+            twsMapBatches.foreach { b =>
+              in.addData(b.map { case (u, t) => StatefulProfiles.TypedEvent(u, t) })
+              q.processAllAvailable()
+            }
           }
         }
-        s.table(qn)
           .select(col("user_id"), col("event_type"), col("n"))
           .orderBy(col("user_id"), col("event_type"), col("n"))
       },
@@ -1487,27 +1328,17 @@ object Ingest extends QueryPack {
     // — Agarwal et al. 2012 — which count-min top-k is not).
     "stream_heavy_hitters_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.stream.StatefulProfiles
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[StatefulProfiles.Item]
+        import s.implicits._
+        val in = MemoryStream[StatefulProfiles.Item](s)
         val hh = StatefulProfiles.heavyHitters(in.toDS(), k = 3)
-        val qn = s"hh_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          withRocksDbState(s) {
-            val q = hh.toDF().writeStream.format("memory").queryName(qn)
-              .outputMode("update").start()
-            try {
-              hhBatches.foreach { b =>
-                in.addData(b.map(StatefulProfiles.Item(_)))
-                q.processAllAvailable()
-              }
-            } finally q.stop()
+        withRocksDbState(s) {
+          memoryRoundtrip(s, hh.toDF(), "update") { q =>
+            hhBatches.foreach { b =>
+              in.addData(b.map(StatefulProfiles.Item(_)))
+              q.processAllAvailable()
+            }
           }
         }
-        s.table(qn)
           .select(col("batch_n"), col("item"), col("est"))
           .orderBy(col("batch_n"), col("item"))
       },
@@ -1544,25 +1375,15 @@ object Ingest extends QueryPack {
 
     "stream_state_counts_roundtrip" -> QueryDef(
       (s, _) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import graft.engine.stream.WindowedAggs
-        val spark = s
-        import spark.implicits._
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val in = MemoryStream[WindowedAggs.UserEvent]
+        import s.implicits._
+        val in = MemoryStream[WindowedAggs.UserEvent](s)
         val counts = WindowedAggs.runningUserCounts(in.toDS())
-        val qn = s"state_rt_${System.nanoTime()}"
-        withStreamingPartitions(s) {
-          val q = counts.toDF().writeStream.format("memory").queryName(qn)
-            .outputMode("append").start()
-          try {
-            stateBatches.foreach { b =>
-              in.addData(b.map { case (u, e) => WindowedAggs.UserEvent(u, e) })
-              q.processAllAvailable()
-            }
-          } finally q.stop()
+        memoryRoundtrip(s, counts.toDF(), "append") { q =>
+          stateBatches.foreach { b =>
+            in.addData(b.map { case (u, e) => WindowedAggs.UserEvent(u, e) })
+            q.processAllAvailable()
+          }
         }
-        s.table(qn)
           .select(col("user_id"), col("n_events").cast("long").as("n"))
           .orderBy(col("user_id"), col("n"))
       },

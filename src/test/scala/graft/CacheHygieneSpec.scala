@@ -33,6 +33,36 @@ class CacheHygieneSpec extends AnyFunSuite {
         s"$name left persisted frames in the CacheManager after drain")
     }
 
+  // every declared roundtrip that runs on a memory sink: the sink's temp
+  // view must be dropped once the result frame is resolved, and the frame
+  // must still read the sink's rows after the drop
+  private val memorySinkRoundtrips = Seq(
+    "stream_tumbling_roundtrip", "stream_session_roundtrip",
+    "stream_dedup_roundtrip", "stream_dedup_minhash_roundtrip",
+    "stream_join_roundtrip", "stream_availablenow_roundtrip",
+    "stream_update_mode_roundtrip", "stream_static_join_roundtrip",
+    "stream_sliding_roundtrip", "stream_two_level_roundtrip",
+    "stream_left_join_roundtrip", "stream_full_join_roundtrip",
+    "stream_right_join_roundtrip", "stream_tws_roundtrip",
+    "stream_tws_map_roundtrip", "stream_heavy_hitters_roundtrip",
+    "stream_state_counts_roundtrip")
+
+  private def tempViews: Seq[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).sorted.toSeq
+
+  for (name <- memorySinkRoundtrips)
+    test(s"$name leaves no temp view behind and returns the same rows when rerun") {
+      val before = tempViews
+      def run(): Seq[String] = {
+        val rows = SparkEntry.queries(name)(spark, d).collect().map(_.toString).toSeq
+        assert(tempViews == before, s"$name left a temp view registered")
+        rows
+      }
+      val first = run()
+      assert(first.nonEmpty, s"$name must emit rows")
+      assert(run() == first, s"$name returned different rows on its second run")
+    }
+
   test("building the NEXT declared query drains the previous query's cache") {
     // library usage pattern: no tool-side clearCache anywhere — the drain
     // embedded in SparkEntry.queries is the only release mechanism

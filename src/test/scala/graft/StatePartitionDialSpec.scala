@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The streaming scale-out invariant: keyed state is partitioned by
   * HASH(key) % numStatePartitions, so the gated output of every stateful
   * roundtrip must be IDENTICAL whether the state store runs on 1 partition
-  * (the literal-input default — see Ingest.withStreamingPartitions) or 8
+  * (the literal-input default — see Ingest.withStreamingPartitions,
+  * which Ingest.memoryRoundtrip runs every memory-sink roundtrip in) or 8
   * (keys spread across stores, most partitions empty some batches). This
   * is the property that lets the same pipeline run at
   * statePartitions = 2 x cluster cores at 100 TB: partition count is a

@@ -209,6 +209,18 @@ class StreamingOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("awaitDrained stops a query still running at its timeout and throws") {
+    import spark.implicits._
+    val in = MemoryStream[Long](spark)
+    val q = in.toDF().writeStream.format("noop")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    val e = intercept[java.util.concurrent.TimeoutException](
+      graft.queries.Ingest.awaitDrained(q, 200L))
+    assert(!q.isActive, "a timed-out query must be stopped")
+    assert(e.getMessage.contains(q.id.toString) && e.getMessage.contains("200 ms"))
+  }
+
   test("CentroidAggregator matches built-in per-dimension averages") {
     import spark.implicits._
     val e = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
