@@ -7,18 +7,18 @@ import org.apache.spark.sql.functions._
   * replica is preserved while replicas stay distinct) and run the FULL
   * production construction — `SuffixArray.ranksFromWords`, the exact
   * code path `dedup_suffix_repeats` declares (word-keyed first pass,
-  * radix-16 passes, GRAFT_SUFFIX_DEBUG per-pass logging).
+  * radix-16 passes). Per-pass walls of that query at a scale dir are
+  * the `[job]` lines of `graft.tools.Probe dedup_suffix_repeats <dir>`,
+  * one per pass action under its own `SuffixArray.scala` call site.
   *
   * What linearity means here: position count and per-pass cost must
   * scale ~linearly in the replica count — each pass is one per-doc
   * lead window plus the bucketed distributed rank(), both linear in
-  * positions. The per-pass class-count log (debug env) shows the
-  * resolution process: class cardinality approaches the position count
-  * as suffixes resolve, and the verbatim replicas (0-2) keep exact
-  * ties to the end — the suffix array correctly refuses to distinguish
-  * identical suffixes.
+  * positions. The verbatim replicas (0-2) keep exact ties to the end —
+  * the suffix array correctly refuses to distinguish identical
+  * suffixes.
   *
-  * Usage: GRAFT_SUFFIX_DEBUG=1 sbt "runMain graft.StressSuffix [reps]"
+  * Usage: sbt "runMain graft.StressSuffix [reps]"
   * (default 10 -> ~2.8M positions; not part of the bench contract).
   */
 object StressSuffix {

@@ -58,10 +58,7 @@ object SuffixArray {
     * identical tie classes.
     */
   def ranks(pos0: DataFrame, rounds: Int, boundRound: Int): DataFrame = {
-    val tlog = mkTlog()
-    val tInit = System.nanoTime()
     val cur = pos0.localCheckpoint()
-    tlog("pos0 checkpoint", tInit)
     if (rounds <= 0)
       return cur.withColumn("rk_bound", col("rk"))
         .withColumn("_sab", lit(0L))
@@ -75,7 +72,7 @@ object SuffixArray {
     // only on the all-singletons row-count check inside the loop
     passes(cur, rounds, boundRound, firstKey = "rk",
       firstBucket = None, firstSentinel = lit(-1L),
-      initClasses = -1L, initMax = curMax, tlog)
+      initClasses = -1L, initMax = curMax)
   }
 
   /** As [[ranks]], but round 0 is the WORD COLUMN itself: input
@@ -93,7 +90,6 @@ object SuffixArray {
   def ranksFromWords(pos: DataFrame, rounds: Int, boundRound: Int): DataFrame = {
     // graft_bucket lives in the session function registry (idempotent)
     graft.functions.GraftFunctions.register(pos.sparkSession)
-    val tlog = mkTlog()
     // no meaningful zero-pass result exists in word mode (ranks() can
     // hand back its numeric round-0 rk; a word column cannot be one)
     require(rounds >= 1, "ranksFromWords needs at least one pass")
@@ -117,7 +113,6 @@ object SuffixArray {
     // Corpora whose vocabulary overflows the bound keep the string
     // pass 1 below (the detection distinct is noise next to the string
     // sort it precedes).
-    val t0 = System.nanoTime()
     // the distinct is checkpointed so the dictionary build and every
     // boundary/pass action read it once — uncheckpointed, each action
     // re-ran the corpus-wide distinct through broadcast(dict)'s lineage.
@@ -130,13 +125,12 @@ object SuffixArray {
     // one extra read costs far less than the held memory did
     val vocab0 = pos.select(col("w")).distinct().localCheckpoint()
     val v = vocab0.count()
-    tlog(s"vocab count ($v)", t0)
     if (v == 0)
       // empty corpus: schema-stable empty result
       return pos.selectExpr("doc_id", "p", "gid", "CAST(1 AS BIGINT) AS rk")
         .withColumn("rk_bound", col("rk")).withColumn("_sab", lit(0L))
     if (v <= DictVocabMax)
-      return dictionaryPasses(pos, vocab0, v, rounds, boundRound, tlog)
+      return dictionaryPasses(pos, vocab0, v, rounds, boundRound)
     // string fallback (vocab past DictVocabMax): checkpoint the word
     // positions once so the boundary/pass actions don't re-run the
     // caller's tokenize lineage per action
@@ -160,7 +154,6 @@ object SuffixArray {
     // re-running the caller's tokenize lineage
     passes(posD, rounds, boundRound, firstKey = "w",
       firstBucket = Some { (boundarySrc, paired) =>
-        val t0 = System.nanoTime()
         // pass-1 fan = 8x the shuffle parallelism (r18, guide §2.5 — see
         // the dictionary path's note), capped at 512 (r12 ADVICE #3):
         // the bucket column is a straight-line sum of `fan-1` literal
@@ -171,7 +164,6 @@ object SuffixArray {
         // avoid.
         val fan = math.min(512, 8 * GlobalOrder.fanOf(boundarySrc))
         val bnds = wordBoundaries(boundarySrc, fan)
-        tlog("pass-1 boundary aggregate", t0)
         // the packed prefix is PROJECTED ONCE and each comparison binds
         // the materialized column (r12 ADVICE #3: the inlined form
         // re-evaluated PackedPrefixSql twice per CASE term). The
@@ -182,7 +174,7 @@ object SuffixArray {
           .drop("_pk")
       },
       firstSentinel = lit(""),
-      initClasses = -1L, initMax = 0L, tlog)
+      initClasses = -1L, initMax = 0L)
   }
 
   /** Vocabulary bound for the dictionary-encoded pass 1: a 2^20-word
@@ -202,8 +194,7 @@ object SuffixArray {
     * ordering of the other modes.
     */
   private def dictionaryPasses(pos0: DataFrame, vocab0: DataFrame, v: Long,
-      rounds: Int, boundRound: Int,
-      tlog: (String, Long) => Unit): DataFrame = {
+      rounds: Int, boundRound: Int): DataFrame = {
     val bnd = math.min(math.max(boundRound, 0), rounds)
     val stepLog = math.min(4, if (bnd > 0) bnd else rounds)
     val nComp = 1 << stepLog
@@ -213,11 +204,9 @@ object SuffixArray {
     // narrow integer rows (vs the word-string frame the old posD
     // checkpoint held), read by the boundary mini-window and pass 1,
     // then released the moment pass 1's own checkpoint materializes
-    val tEnc = System.nanoTime()
     val enc = pos0.join(broadcast(dict), "w").drop("w")
       .withColumnRenamed("_wrk", "rk")
       .localCheckpoint()
-    tlog("dict encode checkpoint", tEnc)
     val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     val bpc = (64 - java.lang.Long.numberOfLeadingZeros(v)).toInt
     val npg = math.max(1, 63 / bpc)
@@ -226,7 +215,6 @@ object SuffixArray {
         g.zipWithIndex.map { case (c, j) =>
           shiftleft(c, bpc * (g.size - 1 - j)) }.reduce(_ + _).as(s"_pk$gi")
       }
-    val t1 = System.nanoTime()
     // fan = 8x the shuffle parallelism, capped at 512 (r18, guide §2.5:
     // with fan == partition count, hashing the bucket ids into the
     // shuffle partitions is balls-in-bins — the fullest task carries
@@ -260,8 +248,6 @@ object SuffixArray {
         .agg(expr(s"approx_percentile(_pk, array($qs), 10000)")).head
       if (bndsRow.isNullAt(0)) Seq.empty[Long] else bndsRow.getSeq[Long](0)
     }
-    tlog("dict pass-1 boundary aggregate (10% docs)", t1)
-    val t2 = System.nanoTime()
     var paired = enc
     for (i <- 1 until nComp)
       paired = paired.withColumn(s"_rkb$i",
@@ -294,9 +280,7 @@ object SuffixArray {
       if (stepLog == bnd && bnd > 0)
         (cur.withColumn("rk_bound", col("rk")), true)
       else (cur, false)
-    tlog(s"dict pass to span ${1L << stepLog} ($newClasses classes" +
-      s"${if (stable) ", stable" else ""})", t2)
-    refineFrom(cur2, stepLog, rounds, bnd, frozen, totalRows, stable, tlog)
+    refineFrom(cur2, stepLog, rounds, bnd, frozen, totalRows, stable)
   }
 
   /** The packed two-code-point prefix of `w` as a long — exactly
@@ -381,12 +365,6 @@ object SuffixArray {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
 
-  private def mkTlog(): (String, Long) => Unit = {
-    val debug = sys.env.contains("GRAFT_SUFFIX_DEBUG")
-    (name, t0) =>
-      if (debug) println(f"[suffix-ranks] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-  }
-
   /** The shared pass loop: pass 1 may key on a caller-supplied column
     * (string mode) with its own monotone bucketing stage and sentinel
     * (the stage receives (boundary source = pre-pairing frame, paired
@@ -416,11 +394,9 @@ object SuffixArray {
       firstKey: String,
       firstBucket: Option[(DataFrame, DataFrame) => DataFrame],
       firstSentinel: org.apache.spark.sql.Column,
-      initClasses: Long, initMax: Long,
-      tlog: (String, Long) => Unit): DataFrame = {
+      initClasses: Long, initMax: Long): DataFrame = {
     val bnd = math.min(math.max(boundRound, 0), rounds)
     val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    val tPass = System.nanoTime()
     // advance up to ×16 in pass 1, but land exactly on the bound span
     // so rk_bound is the tuple-prefix rank of this same pass
     val stepLog = math.min(4, if (bnd > 0) bnd else rounds)
@@ -462,9 +438,7 @@ object SuffixArray {
       if (stepLog == bnd && bnd > 0)
         (cur.withColumn("rk_bound", col("rk")), true)
       else (cur, false)
-    tlog(s"pass to span ${1L << stepLog} ($newClasses classes" +
-      s"${if (stable) ", stable" else ""})", tPass)
-    refineFrom(cur2, stepLog, rounds, bnd, frozen, totalRows, stable, tlog)
+    refineFrom(cur2, stepLog, rounds, bnd, frozen, totalRows, stable)
   }
 
   /** Row-count offset stitch for a pass-1 `local` frame (bucketed rank
@@ -513,15 +487,13 @@ object SuffixArray {
     * dictionary pass 1 ([[ranksFromWords]]).
     */
   private def refineFrom(cur0: DataFrame, startSpanLog: Int, rounds: Int,
-      bnd: Int, frozen0: Boolean, totalRows: Long, stable0: Boolean,
-      tlog: (String, Long) => Unit): DataFrame = {
+      bnd: Int, frozen0: Boolean, totalRows: Long, stable0: Boolean): DataFrame = {
     val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     var cur = cur0
     var spanLog = startSpanLog
     var frozen = frozen0
     var stable = stable0
     while (spanLog < rounds && !stable) {
-      val tPass = System.nanoTime()
       // advance up to ×16 per pass, landing exactly on the bound span
       val stepLog = math.min(4,
         (if (!frozen && bnd > spanLog) bnd else rounds) - spanLog)
@@ -565,8 +537,6 @@ object SuffixArray {
         frozen = true
       }
       spanLog += stepLog
-      tlog(s"pass to span ${1L << spanLog} ($nRef tied rows left" +
-        s"${if (stable) ", stable" else ""})", tPass)
     }
     // stable-early (ranks final, so the bound rank equals the final
     // rank) or rounds <= boundRound: freeze now

@@ -637,19 +637,6 @@ object Dedup extends QueryPack {
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= 2)
 
-  /** Raw (doc_id, band, key) membership — FunnelDiag's bucket-composition
-    * forensics. `capped = false` reproduces the pre-r8 uncapped-signature
-    * behavior whose bucket collapse the 1M leg caught.
-    */
-  private[graft] def bandBucketLedgerDocs(
-      s: SparkSession, d: String, capped: Boolean = true): DataFrame =
-    if (capped) minHashBandsFrom(minHashSig(s, d))
-    else minHashBandsFrom(
-      shingleArr(s, d)
-        .selectExpr("doc_id", "graft_minhash(sh_arr) AS sig")
-        .selectExpr("doc_id" +:
-          (0 until MinHashK).map(i => s"element_at(sig, ${i + 1}) AS s$i"): _*))
-
   /** Verified near-dup pairs over caller-persisted hot + shingle frames
     * (stage 3) — identical plan to dedup_minhash_pairs.
     */

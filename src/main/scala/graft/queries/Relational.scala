@@ -3434,7 +3434,7 @@ object Relational extends QueryPack {
         // persisted (r17): su feeds BOTH the purchase-side range filter
         // and the left join, and the two references do NOT canonicalize
         // to one reusable exchange under AQE — measured 3 full events
-        // scans per run (ProbeJobs inRows 303k vs the 100k-row table);
+        // scans per run (tools.Probe inRows 303k vs the 100k-row table);
         // caching the user-bounded firsts frame makes it 2 (one per
         // event-type filter, the irreducible pair)
         val su = ev.filter(col("event_type") === "signup")

@@ -283,7 +283,7 @@ object Similarity extends QueryPack {
     * the KEYING corpus (both cross-side inputs together, so the two
     * sides key identically).
     */
-  private[graft] def rawBandRows(e: DataFrame, ppb: Int, bands: Int,
+  private def rawBandRows(e: DataFrame, ppb: Int, bands: Int,
       withExt: Boolean, n: Long, mq: Array[Long]): DataFrame = {
     graft.functions.GraftFunctions.register(e.sparkSession)
     def fields(b: Int) =
@@ -316,7 +316,7 @@ object Similarity extends QueryPack {
     * declared corpora; a deployment recurses. No-op (and not planned)
     * when hotCap is MaxValue.
     */
-  private[graft] def splitBandRows(rows: DataFrame, counts: => DataFrame,
+  private def splitBandRows(rows: DataFrame, counts: => DataFrame,
       ppb: Int, hotCap: Long): DataFrame =
     if (hotCap == Long.MaxValue)
       rows.select(col("vec_id"), col("band"), col("key"))
@@ -326,7 +326,7 @@ object Similarity extends QueryPack {
           s"CASE WHEN _kc > $hotCap THEN (key + 1) * ${1L << ppb} + ext ELSE key END AS key")
 
   /** (band, key, _kc) occupancy frame feeding [[splitBandRows]]. */
-  private[graft] def bandKeyCounts(countRows: DataFrame): DataFrame =
+  private def bandKeyCounts(countRows: DataFrame): DataFrame =
     countRows.groupBy(col("band"), col("key")).agg(count(lit(1)).as("_kc"))
 
   /** Occupancy cap feeding the split: 8× the expected uniform per-key
@@ -363,7 +363,7 @@ object Similarity extends QueryPack {
     * threshold_curve) each re-ran the full hyperplane-LSH funnel —
     * bucket, band self-join, verify-score — over the same input.
     */
-  private def bandCandidatesScored(s: SparkSession, d: String): DataFrame =
+  private[graft] def bandCandidatesScored(s: SparkSession, d: String): DataFrame =
     graft.engine.Persisted.shared(s, s"embed_band_scored|$d") {
       // project to (vid_a, vid_b, cos) BEFORE the persist (r13 10x scale
       // audit): the cosine helper carries BOTH candidate embedding
@@ -381,12 +381,6 @@ object Similarity extends QueryPack {
         hotCap = bandHotCap(n, ppb))
         .select(col("vid_a"), col("vid_b"), col("cos"))
     }
-
-  /** tools.TierStats hook: the shared tier frame, for candidate-vs-
-    * output accounting at scale dirs.
-    */
-  private[graft] def tierForStats(s: SparkSession, d: String): DataFrame =
-    bandCandidatesScored(s, d)
 
   /** Bench hook, mirroring Dedup.warmShared: materialize the embedding
     * LSH family's shared frame outside the timed region.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,19 +40,7 @@ class JobCountGuardSpec extends AnyFunSuite {
     // cold run materializes the shared tiers; the guarded number is the
     // steady-state orchestration cost
     SparkEntry.queries(name)(spark, d).count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      SparkEntry.queries(name)(spark, d).count()
-      // let the listener bus drain (the ProbeJobs discipline — the bus
-      // is async and private[spark], so a bounded sleep is the API)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
+    graft.tools.Probe.measure(spark)(SparkEntry.queries(name)(spark, d).count())._2.size
   }
 
   for ((name, bound) <- Bounds)

@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, ExecutionException}
+import java.util.concurrent.{CompletionException, ExecutionException}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.GraftListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -197,31 +193,16 @@ class StreamProcessorSpec extends AnyFunSuite {
       bronze, new ParquetAppendSink(root.resolve("dead").toString),
       checkpointLocation = root.resolve("ckpt").toString,
       trigger = Trigger.ProcessingTime("100 milliseconds"))
-    // (job id, job group, micro-batch id) of every job started meanwhile
-    val jobs = new ConcurrentLinkedQueue[(Int, String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
-        jobs.add((j.jobId, prop("spark.jobGroup.id"), prop("streaming.sql.batchId")))
-      }
+    val (runId, seen) = graft.tools.Probe.measure(spark) {
+      val q = proc.start(oneFilePerTrigger(inDir))
+      try q.processAllAvailable() finally q.stop()
+      q.runId.toString
     }
-    spark.sparkContext.addSparkListener(listener)
-    val runId =
-      try {
-        val q = proc.start(oneFilePerTrigger(inDir))
-        try q.processAllAvailable() finally q.stop()
-        q.runId.toString
-      } finally {
-        GraftListenerBus.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    val seen = jobs.asScala.toSeq
-    val stray = seen.filter(_._2 != runId)
+    val stray = seen.filter(_.group != runId)
     assert(stray.isEmpty, s"jobs outside the stream's job group $runId: $stray")
     // the bronze write and the dead-letter write; the event schema has no
     // integral column, so no stats ledger job and no ledger dir
-    val perBatch = seen.groupBy(_._3).map { case (b, js) => b -> js.size }
+    val perBatch = seen.groupBy(_.batchId).map { case (b, js) => b.fold("")(_.toString) -> js.size }
     assert(perBatch == Map("0" -> 2, "1" -> 2, "2" -> 2), s"jobs per batch: $perBatch")
     assert(!Files.exists(root.resolve("bronze").resolve("_manifest")))
     assert(bronze.read(spark).count() == batchCounts(inDir.toString)._1)
