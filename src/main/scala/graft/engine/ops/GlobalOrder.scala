@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *   3. stitch buckets with a per-bucket offset frame — at most `fan`
   *      rows, one per non-empty bucket — which is the only place an
   *      unpartitioned window remains (bounded by construction; the
-  *      global-window plan sweep whitelists exactly this `_gb`/`_grn`
+  *      global-window plan sweep whitelists exactly this `_gb`
   *      shape).
   *
   * Companion of [[SuffixArray.ranks]]'s internal pass (which buckets by a
@@ -131,8 +131,9 @@ object GlobalOrder {
     * therefore hold ~1/fan of the ROWS for ANY key distribution, up to key-VALUE
     * granularity (an ultra-hot tied value is irreducible: equal keys
     * must share a bucket, or tie-break ordering would split across the
-    * seam — the 10M-row zipf stress leg measures 4% hottest-bucket
-    * share against a 90% value cluster).
+    * seam — a 10M-row zipf frame measured 4% hottest-bucket share
+    * against a 90% value cluster, SURVEY.md §8.14; GlobalOrderSpec pins
+    * the balance at 20k rows).
     *
     * The bucket is a monotone function of the key VALUE alone, so
     * boundaries never split ties and never reorder keys — which is the
@@ -393,7 +394,9 @@ object GlobalOrder {
     * non-empty bucket's FIRST row — one boundary row exchanged per
     * bucket, never a global sort. The globally last row keeps NULL
     * leads, exactly as the single-task window would. Appends
-    * `<col><suffix>` for each lead column.
+    * `<col><suffix>` for each lead column. Lead columns must be atomic
+    * (numeric, string, boolean, date, timestamp); an array or struct
+    * column throws IllegalArgumentException.
     */
   def lead1(df: DataFrame, key: Column, ties: Seq[Column],
       leadCols: Seq[String], suffix: String = "_nx"): DataFrame =
@@ -413,8 +416,20 @@ object GlobalOrder {
 
   private def lead1Impl(bdf: DataFrame, sort: Seq[Column],
       leadCols: Seq[String], suffix: String): DataFrame = {
+    // lead columns must be atomic: the seam patch re-embeds their
+    // values as typed literals, which arrays and structs do not survive
+    leadCols.foreach { c =>
+      import org.apache.spark.sql.types._
+      val dt = bdf.schema(c).dataType
+      require(dt match {
+        case LongType | IntegerType | ShortType | ByteType | BooleanType |
+             StringType | DoubleType | FloatType | DateType |
+             TimestampType | _: DecimalType => true
+        case _ => false
+      }, s"lead1: lead column '$c' has non-atomic type ${dt.simpleString}")
+    }
     val wloc = Window.partitionBy(col("_gb")).orderBy(sort: _*)
-    // SINGLE-PASS seam patch for atomic lead columns (r18, guide §5/§2.4):
+    // SINGLE-PASS seam patch (r18, guide §5/§2.4):
     // each bucket's first row — the value the previous bucket's LAST row
     // needs as its lead — is min_by over the sort tuple on the PRE-window
     // frame, one bounded collect; the seam substitution is then a
@@ -425,72 +440,34 @@ object GlobalOrder {
     // lexicographic — exactly the orderBy(sort) contract (all helpers
     // pass plain ascending columns; a SortOrder inside struct() fails
     // analysis loudly, never silently misorders).
-    val atomic = {
-      import org.apache.spark.sql.types._
-      leadCols.forall(c => bdf.schema(c).dataType match {
-        case LongType | IntegerType | ShortType | ByteType | BooleanType |
-             StringType | DoubleType | FloatType | DateType |
-             TimestampType => true
-        case _: DecimalType => true
-        case _ => false
-      })
+    val firstRows = bdf
+      .groupBy(col("_gb").cast("long").as("_gbl"))
+      .agg(min_by(struct(leadCols.map(col): _*), struct(sort: _*)).as("_gfx"))
+      .collect().map(r => (r.getLong(0), r.getStruct(1))).sortBy(_._1)
+    // bucket -> the NEXT non-empty bucket's first row (empty buckets
+    // have no seam rows, so consecutive-present pairing bridges them)
+    val nexts = firstRows.sliding(2).collect {
+      case Array((b, _), (_, nxt)) => (b, nxt)
+    }.toSeq
+    // literal-MAP lookup, not a CASE chain (r18): fan-1 whens per lead
+    // column blew the generated method past the 64KB Janino limit at a
+    // 256 fan and the whole stage fell back to interpreted execution;
+    // a constant-folded map is one expression node, and element_at
+    // only evaluates on seam rows. NULL next-values are simply absent
+    // from the map — an element_at miss IS null.
+    def patchFor(c: String, j: Int): Column = {
+      val dt = bdf.schema(c).dataType
+      val entries = nexts.collect { case (b, row) if !row.isNullAt(j) =>
+        Seq(lit(b), lit(row.get(j)).cast(dt))
+      }.flatten
+      if (entries.isEmpty) lit(null).cast(dt)
+      else element_at(map(entries: _*), col("_gb").cast("long"))
     }
-    if (atomic) {
-      val firstRows = bdf
-        .groupBy(col("_gb").cast("long").as("_gbl"))
-        .agg(min_by(struct(leadCols.map(col): _*), struct(sort: _*)).as("_gfx"))
-        .collect().map(r => (r.getLong(0), r.getStruct(1))).sortBy(_._1)
-      // bucket -> the NEXT non-empty bucket's first row (empty buckets
-      // have no seam rows, so consecutive-present pairing bridges them)
-      val nexts = firstRows.sliding(2).collect {
-        case Array((b, _), (_, nxt)) => (b, nxt)
-      }.toSeq
-      // literal-MAP lookup, not a CASE chain (r18): fan-1 whens per lead
-      // column blew the generated method past the 64KB Janino limit at a
-      // 256 fan and the whole stage fell back to interpreted execution;
-      // a constant-folded map is one expression node, and element_at
-      // only evaluates on seam rows. NULL next-values are simply absent
-      // from the map — an element_at miss IS null.
-      def patchFor(c: String, j: Int): Column = {
-        val dt = bdf.schema(c).dataType
-        val entries = nexts.collect { case (b, row) if !row.isNullAt(j) =>
-          Seq(lit(b), lit(row.get(j)).cast(dt))
-        }.flatten
-        if (entries.isEmpty) lit(null).cast(dt)
-        else element_at(map(entries: _*), col("_gb").cast("long"))
-      }
-      val withSent = bdf.withColumn("_ghn", lead(lit(1), 1).over(wloc))
-      leadCols.zipWithIndex.foldLeft(withSent) { case (b, (c, j)) =>
-        b.withColumn(c + suffix,
-          when(col("_ghn").isNotNull, lead(col(c), 1).over(wloc))
-            .otherwise(patchFor(c, j)))
-      }.drop("_gok", "_gb", "_ghn")
-    } else {
-      // legacy union/join shape for non-atomic lead columns (arrays,
-      // structs — literal re-embedding is not type-safe for those)
-      val base0 = bdf
-        .withColumn("_grn", row_number().over(wloc))
-        // sentinel marking "has an in-bucket successor" — leadCols
-        // themselves may legitimately hold NULLs
-        .withColumn("_ghn", lead(lit(1), 1).over(wloc))
-      val base = cut(leadCols.foldLeft(base0) { (b, c) =>
-        b.withColumn(c + suffix, lead(col(c), 1).over(wloc))
-      })
-      // first row of each bucket, keyed by the PREVIOUS non-empty bucket
-      // (lag over the <=fan-row per-bucket frame bridges empty buckets)
-      val firsts = base.where(col("_grn") === 1)
-        .select(col("_gb") +: leadCols.map(c => col(c).as(c + "_gfx")): _*)
-        .withColumn("_gpb", lag(col("_gb"), 1).over(Window.orderBy(col("_gb"))))
-        .where(col("_gpb").isNotNull)
-        .drop("_gb")
-      val inner = base.where(col("_ghn").isNotNull)
-      val seams = base.where(col("_ghn").isNull)
-        .join(firsts, col("_gb") === col("_gpb"), "left")
-      val patched = leadCols.foldLeft(seams) { (b, c) =>
-        b.withColumn(c + suffix, col(c + "_gfx"))
-      }.select(inner.columns.map(col): _*)
-      inner.unionByName(patched)
-        .drop("_gok", "_gb", "_grn", "_ghn")
-    }
+    val withSent = bdf.withColumn("_ghn", lead(lit(1), 1).over(wloc))
+    leadCols.zipWithIndex.foldLeft(withSent) { case (b, (c, j)) =>
+      b.withColumn(c + suffix,
+        when(col("_ghn").isNotNull, lead(col(c), 1).over(wloc))
+          .otherwise(patchFor(c, j)))
+    }.drop("_gok", "_gb", "_ghn")
   }
 }

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * contribution aggregation); degrees broadcast once. The plan is
   * truncated per round with localCheckpoint so it does not grow with the
   * iteration count (set a checkpoint dir and use checkpoint() on a real
-  * cluster). StressCheck runs it over the dup-heavy 25x corpus graph
-  * (25,443 vertices / 22,907 pairs): 3 rounds complete without plan
-  * growth or skew, same shape as the 500-pair bench graph.
+  * cluster). Over a dup-heavy 25x corpus graph (25,443 vertices /
+  * 22,907 pairs) 3 rounds measured without plan growth or skew, same
+  * shape as the 500-pair bench graph (SURVEY.md §8.9); PageRankSpec
+  * pins the semantics.
   */
 object PageRank {
 

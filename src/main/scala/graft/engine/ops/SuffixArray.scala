@@ -299,7 +299,7 @@ object SuffixArray {
     * never results. A tiny sample (< ~5k rows — small corpora) falls
     * back to the exact full-frame sketch, where sampling noise could
     * otherwise collapse most rows into a couple of buckets. Exposed
-    * `private[graft]` so the stress leg measures the boundaries the
+    * `private[graft]` so GlobalOrderSpec measures the boundaries the
     * production pass actually uses.
     */
   private[graft] def wordBoundaries(df: DataFrame, fan: Int): Seq[Long] =

@@ -799,8 +799,8 @@ case class MortonInterleave(left: Expression, right: Expression)
   * `filter(arr, x -> NOT array_contains(hot, x))`.
   *
   * This is the stop-shingle cap's hot path: the broadcast hot set grows
-  * with corpus size (the 1M-doc StressFunnel leg measured the HOF
-  * linear scan dominating signature extraction), while the binary
+  * with corpus size (at 1M docs the HOF linear scan measured
+  * dominating signature extraction, SURVEY.md §8.13), while the binary
   * search keeps the per-row cost flat in everything but log |hot|.
   * Contract: `right` MUST be sorted ascending (hotShingleArrFrom emits
   * sort_array(collect_list(..))); a violation silently keeps elements.

@@ -261,8 +261,8 @@ object Dedup extends QueryPack {
     * feature space (the verify stage's capped rows can't pair them
     * either, so the exclusion is consistent end-to-end).
     *
-    * Why signatures must see the CAPPED space (r8, caught by the 1M-doc
-    * StressFunnel leg): a shingle shared by a large fraction of the
+    * Why signatures must see the CAPPED space (r8, caught at 1M docs;
+    * SURVEY.md §8.13): a shingle shared by a large fraction of the
     * corpus wins the MinHash minimum for every document containing it,
     * collapsing whole LSH bands into one bucket — the measured 1M-doc
     * corpus produced single buckets of 1,785 docs and 36.8M candidate
@@ -276,10 +276,10 @@ object Dedup extends QueryPack {
       // graft_minus_sorted: binary search against the SORTED broadcast hot
       // array — O(log |hot|) per shingle. The straightforward
       // filter(sh_arr, x -> NOT array_contains(hot, x)) is a linear scan
-      // whose per-row cost grows with the hot-set size; the 1M-doc
-      // StressFunnel leg measured it dominating signature extraction
-      // (hot grows with the corpus), so the cap's hot path gets the
-      // native expression.
+      // whose per-row cost grows with the hot-set size; at 1M docs it
+      // measured dominating signature extraction (hot grows with the
+      // corpus; SURVEY.md §8.13), so the cap's hot path gets the native
+      // expression.
       .selectExpr("doc_id", "graft_minus_sorted(sh_arr, hot) AS sh_arr")
       .where("size(sh_arr) >= 1")
 
@@ -410,24 +410,18 @@ object Dedup extends QueryPack {
     * dedup_clusters, dedup_keep_best, dedup_rate_by_source,
     * split_leakage_audit, graph_pagerank_dups and dedup_jaccard_pairs'
     * LSH branch each re-ran the full shingle → signature → band →
-    * candidate → exact-verify funnel for the identical result. The
-    * bands intermediate stays QUERY-scoped (registered inside
-    * minHashDupPairsOver) — only the final bounded pair list persists
-    * across queries.
+    * candidate → exact-verify funnel for the identical result. It
+    * reads its band rows from [[sharedBands]].
     */
   private def sharedDupPairs(s: SparkSession, d: String): DataFrame =
     graft.engine.Persisted.shared(s, s"lshDupPairs|$d") {
-      minHashDupPairsOver(s, d,
-        hotShingleArrFrom(sharedShingleRaw(s, d)),
-        sharedCappedShingles(s, d),
-        bandsPre = Some(sharedBands(s, d)))
+      minHashDupPairsOver(sharedCappedShingles(s, d), sharedBands(s, d))
     }
 
   /** The standard (doc_id, band, key) LSH band rows — shared (r11):
     * the pair funnel, the incremental verdicts and the containment
     * pairs each re-ran the corpus signature stage to rebuild the same
-    * band frame. Diagnostic/stress paths with caller-supplied hot rows
-    * keep building their own.
+    * band frame.
     */
   private def sharedBands(s: SparkSession, d: String): DataFrame =
     graft.engine.Persisted.shared(s, s"mh_bands|$d") {
@@ -497,8 +491,7 @@ object Dedup extends QueryPack {
     * it feeds three scans) distinct-shingle frame. Quadratic in the
     * co-shingled pairs of its INPUT, so callers must bound that input:
     * the declared query feeds it a deterministic 1/16 document stratum;
-    * only StressCheck runs it unrestricted (as the exactness baseline
-    * the candidate-restricted production path is measured against).
+    * only [[jaccardAllPairs]] runs it unrestricted.
     */
   private def jaccardOver(shd: DataFrame): DataFrame = {
     val sizes = shd.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -512,8 +505,8 @@ object Dedup extends QueryPack {
   }
 
   /** Unrestricted exact-Jaccard baseline (quadratic in co-shingled
-    * pairs). NOT a declared query — StressCheck exercises it as the
-    * ground truth the candidate-restricted path is compared against.
+    * pairs). NOT a declared query — LadderRecallSpec uses it at sf0.01
+    * as the ground truth the candidate-restricted path must not miss.
     */
   private[graft] def jaccardAllPairs(s: SparkSession, d: String): DataFrame =
     jaccardOver(cappedShingles(shingleRows(s, d).distinct()).persistScoped())
@@ -569,17 +562,13 @@ object Dedup extends QueryPack {
           .select(col("doc_a"), col("doc_b")).localCheckpoint())
     }
 
-  /** As minHashDupPairs, but over a caller-supplied hot-shingle row and
-    * capped+persisted distinct-shingle frame, so a query that needs BOTH
-    * the LSH pairs and another view of the shingle feature space
-    * (dedup_jaccard_pairs' audit stratum) materializes the shingle
-    * pipeline once, not twice.
+  /** Candidate-verified pairs over the capped distinct-shingle frame
+    * and the (doc_id, band, key) band rows — both from the shared tier,
+    * so a query that needs BOTH the LSH pairs and another view of the
+    * shingle feature space (dedup_jaccard_pairs' audit stratum)
+    * materializes the shingle pipeline once, not twice.
     */
-  private def minHashDupPairsOver(
-      s: SparkSession, d: String, hot: DataFrame, shd: DataFrame,
-      bandsPre: Option[DataFrame] = None): DataFrame = {
-    val bands0 = bandsPre.getOrElse(
-      minHashBandsFrom(minHashSigOver(s, d, hot)).persistScoped())
+  private def minHashDupPairsOver(shd: DataFrame, bands0: DataFrame): DataFrame = {
     // rank-proximity candidate window (r15, see NeighborWindow): the
     // shared verified-pair tier is consumed by a dozen queries, and at
     // the 100× corpus its unwindowed band join made the tier's build
@@ -607,47 +596,10 @@ object Dedup extends QueryPack {
       .where(s"jacc >= $JaccThreshold")
   }
 
-  // ---- StressFunnel accessors (graft.StressFunnel only) ----------------
-  // The 1M-doc funnel leg times each stage of the EXACT pipeline the
-  // declared queries compose (no alternate code path), so the stage
-  // frames are exposed read-only to the stress main.
-
-  /** The distinct (doc_id, sh) shingle space — the funnel persists this
-    * once and derives both the capped frame and the hot set from it,
-    * exactly like minHashDupPairs does internally.
-    */
-  private[graft] def funnelRaw(s: SparkSession, d: String): DataFrame =
-    shingleRows(s, d).distinct()
-
-  /** The capped, distinct shingle feature space (stage 1). */
-  private[graft] def funnelShinglesFrom(raw: DataFrame): DataFrame =
-    cappedShingles(raw)
-
-  /** The broadcastable stop-shingle row the signature stage subtracts. */
-  private[graft] def funnelHotFrom(raw: DataFrame): DataFrame =
-    hotShingleArrFrom(raw)
-
-  /** (band, key, n_docs) bucket ledger (stage 2 accounting): LSH
-    * candidate volume is sum n_docs*(n_docs-1)/2 over this frame and the
-    * max row is the hottest bucket — the quantities that must grow
-    * LINEARLY with replica count for the funnel to survive 100 TB.
-    */
-  private[graft] def bandBucketLedger(s: SparkSession, d: String, hot: DataFrame): DataFrame =
-    minHashBandsFrom(minHashSigOver(s, d, hot))
-      .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n_docs"))
-      .where(col("n_docs") >= 2)
-
-  /** Verified near-dup pairs over caller-persisted hot + shingle frames
-    * (stage 3) — identical plan to dedup_minhash_pairs.
-    */
-  private[graft] def funnelPairs(
-      s: SparkSession, d: String, hot: DataFrame, shd: DataFrame): DataFrame =
-    minHashDupPairsOver(s, d, hot, shd)
-
   /** Incremental-dedup verdicts over an arbitrary incoming/existing
     * split (predicates over doc_id): the declared dedup_incremental
-    * instantiates the deterministic 20% stratum; StressCheck probes 5k
-    * verbatim-duplicate incoming docs against a 120k-doc index. The
+    * instantiates the deterministic 20% stratum; OperatorInvariantsSpec
+    * probes verbatim-duplicate incoming docs against their copies. The
     * candidate join is always incoming-bands x existing-bands on (band,
     * key) — per-batch cost O(batch x collisions), independent of corpus
     * size.
@@ -1385,7 +1337,7 @@ object Dedup extends QueryPack {
     // while the full-corpus branch stays candidate-restricted, so no
     // declared query is quadratic in co-shingled pairs any more (the
     // unrestricted baseline lives on as jaccardAllPairs, exercised by
-    // StressCheck). At larger corpora the modulus scales with corpus
+    // LadderRecallSpec). At larger corpora the modulus scales with corpus
     // size to keep the audit a fixed budget. Both branches compute
     // jacc with identical arithmetic over the same capped feature
     // space, so the UNION dedups exactly.

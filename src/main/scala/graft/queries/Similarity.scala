@@ -261,7 +261,7 @@ object Similarity extends QueryPack {
     * `4 + lshExtraBits(N)` — one extra bit per corpus doubling keeps
     * candidates linear, same plan, bigger key space — and the DuckDB
     * oracles mirror the ladder key-for-key (see [[duckBandRows]]).
-    * StressCheck still drives explicit widths for its recall legs.
+    * [[bandedNearDupPairs]] takes an explicit width instead.
     */
   /** One banded key as a Spark SQL expression over the `_vq` column:
     * band bd's bit p is the centered sign of plane `(mult + bd)·ppb +
@@ -390,8 +390,9 @@ object Similarity extends QueryPack {
     ()
   }
 
-  /** Wide-band near-dup pairs — the scale configuration StressCheck
-    * drives at 16 planes x 2 bands over 50k vectors. Every plane index,
+  /** Wide-band near-dup pairs — the scale configuration, measured at 16
+    * planes x 2 bands over 50k vectors (SURVEY.md §8.9); PlanShapeSpec
+    * pins its plan at that width. Every plane index,
     * at any width, comes from the same deterministic decorrelated
     * formula ([[sign]]: (i·37 + j·101 + i²·j·13) % 97 parity) that the
     * [[duckBandRows]] oracle mirrors at its own ladder-derived widths.
@@ -411,17 +412,17 @@ object Similarity extends QueryPack {
     * kNN plays the candidate role. Returns every mutual-best pair with
     * its margin_e6 (callers apply the >1.0 threshold). The declared
     * query runs it at (4 planes x 2 bands) — the bench-corpus dial,
-    * mirrored key-for-key by the DuckDB oracle; StressCheck's bitext
-    * leg drives the SAME code at (16 x 4) over 25k x 25k vectors
-    * (recall 1.000 vs constructed truth), where the exact product
+    * mirrored key-for-key by the DuckDB oracle; the SAME code at
+    * (16 x 4) over 25k x 25k vectors measured recall 1.000 against
+    * constructed truth (SURVEY.md §8.17), where the exact product
     * (625M pairs) is the shape this path exists to avoid. The band
     * width is the corpus-size dial: raise planesPerBand with corpus
     * growth to keep per-key candidates linear.
     */
-  private[graft] def marginBitextLshPairs(a0: DataFrame, b0: DataFrame,
+  private def marginBitextLshPairs(a0: DataFrame, b0: DataFrame,
       planesPerBand: Int, bands: Int, k: Int = 4,
       hotCap: Long = Long.MaxValue,
-      consts: Option[(Long, Array[Long])] = None): DataFrame = {
+      consts: (Long, Array[Long])): DataFrame = {
     graft.functions.GraftFunctions.register(a0.sparkSession)
     def keyed(df: DataFrame, id: String, vec: String, norm: String) =
       df.selectExpr(s"vec_id AS $id", s"embedding AS $vec",
@@ -439,9 +440,8 @@ object Similarity extends QueryPack {
     // the declared query, whose caller passes the per-dir cached consts
     // instead of paying this 65-expression scan again — r15 ADVICE),
     // so the two sides key identically and the oracle's whole-table mq
-    // matches; frame-based callers (StressCheck) leave `consts` unset
-    // and compute fresh over their union
-    val (n, mq) = consts.getOrElse(lshConsts(a0.unionByName(b0)))
+    // matches
+    val (n, mq) = consts
     val withExt = hotCap != Long.MaxValue
     val aRaw = rawBandRows(a0, planesPerBand, bands, withExt, n, mq)
     val bRaw = rawBandRows(b0, planesPerBand, bands, withExt, n, mq)
@@ -532,10 +532,11 @@ object Similarity extends QueryPack {
     * lower-id same-cell neighbor at cosine >= tau, report
     * (cell, n_vectors, n_dropped, n_kept). k is the corpus-size dial —
     * within-cell candidates are sum_c C(n_c, 2), so a deployment raises
-    * k with the corpus to keep cells bounded; StressCheck drives the
-    * k=256 configuration at 50k vectors against the declared k=8.
+    * k with the corpus to keep cells bounded; k=256 at 50k vectors
+    * measured ~30x fewer candidates than the declared k=8 (SURVEY.md
+    * §8.10).
     */
-  private[graft] def semdedupLedger(e0: DataFrame, k: Int, tau: Double): DataFrame = {
+  private def semdedupLedger(e0: DataFrame, k: Int, tau: Double): DataFrame = {
     graft.functions.GraftFunctions.register(e0.sparkSession)
     val e = e0
     val cents = e.filter(col("vec_id") < k)
@@ -2433,9 +2434,9 @@ object Similarity extends QueryPack {
     // shuffles on a band key whose width is the corpus-size dial — and
     // the declared query RIDES the dial (r14): 4-plane bands at the 2k
     // anchor, +1 bit per corpus doubling, oracle-mirrored through the
-    // lshw CTE, so candidates stay linear at any scale (StressCheck
-    // additionally drives explicit 16-plane bands at 25k x 25k,
-    // recall 1.000).
+    // lshw CTE, so candidates stay linear at any scale (explicit
+    // 16-plane bands at 25k x 25k measured recall 1.000, SURVEY.md
+    // §8.17).
     "sim_margin_bitext" -> QueryDef(
       (s, d) => {
         graft.functions.GraftFunctions.register(s)
@@ -2448,7 +2449,7 @@ object Similarity extends QueryPack {
         val n = cc._1
         val ppb = 4 + lshExtraBits(n)
         marginBitextLshPairs(a, b, planesPerBand = ppb, bands = 2,
-          hotCap = bandHotCap(n, ppb), consts = Some(cc))
+          hotCap = bandHotCap(n, ppb), consts = cc)
           .where(col("margin_e6") > 1000000L)
           .orderBy(col("margin_e6").desc, col("a_id"))
           .limit(20)

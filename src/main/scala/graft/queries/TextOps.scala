@@ -168,8 +168,7 @@ object TextOps extends QueryPack {
     * references, a measured ~500,000x re-evaluation hang; the generated
     * loop has nothing to collapse and nothing to cache). Narrow map, no
     * shuffle, no persisted state: the 100 TB signature-extraction shape.
-    * Exposed to the StressFunnel pHash leg (250k payloads); FunctionsSpec
-    * pins bit-identity against [[phashHashesHof]].
+    * FunctionsSpec pins bit-identity against [[phashHashesHof]].
     */
   private[graft] def phashHashes(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -198,7 +197,7 @@ object TextOps extends QueryPack {
   }
 
   /** 8-bit pigeonhole chunk rows (doc_id, h, c, ck) of a hash frame. */
-  private[graft] def phashChunks(hashes: DataFrame): DataFrame =
+  private def phashChunks(hashes: DataFrame): DataFrame =
     hashes.selectExpr("doc_id", "h",
       "explode(transform(sequence(0, 7), c -> struct(c AS c, shiftright(h, CAST(8 * c AS INT)) & 255 AS ck))) AS p")
       .selectExpr("doc_id", "h", "p.c AS c", "p.ck AS ck")
@@ -208,20 +207,21 @@ object TextOps extends QueryPack {
     * MinHash stop-shingle rule transplanted to Hamming space. Hot chunk
     * values are the SIGN PATTERNS nearly every histogram shares (low-
     * frequency AC signs are corpus-systematic, so their 8-bit chunks
-    * collapse onto a handful of values): the r9 StressFunnel pHash leg
-    * measured bucket 24%-of-corpus at 5k payloads and 602M candidates
-    * (12k/doc, superlinear) at 50k — the identical failure mode the
-    * stop-shingle cap fixed for text LSH in r8. Dropping a hot bucket
+    * collapse onto a handful of values): the uncapped r9 index measured
+    * a bucket of 24% of the corpus at 5k payloads and 602M candidates
+    * (12k/doc, superlinear) at 50k (SURVEY.md §8.14) — the identical
+    * failure mode the stop-shingle cap fixed for text LSH in r8.
+    * ScaleOpsSpec pins the cap's contract. Dropping a hot bucket
     * costs recall ONLY for pairs whose every other shared chunk is also
     * hot; near-dups (hamming <= 2) share >= 6 of 8 chunks, so they
     * survive unless ALL their chunks are corpus-typical — the standard
     * recall trade of every production multi-index (FAISS nprobe, LSH
     * band caps). Mirrored in the DuckDB oracle.
     */
-  private[graft] val MaxChunkDocFreq = 1000
+  private val MaxChunkDocFreq = 1000
 
   /** The stop-chunk-capped pigeonhole index rows. */
-  private[graft] def phashIndexChunks(hashes: DataFrame): DataFrame =
+  private def phashIndexChunks(hashes: DataFrame): DataFrame =
     graft.engine.ops.Scale.capHotKeys(
       phashChunks(hashes), expr("c * 256 + ck"), MaxChunkDocFreq)
 
@@ -230,7 +230,7 @@ object TextOps extends QueryPack {
     * stop-chunk-capped buckets, so per-payload candidate volume is
     * bounded by 8 * MaxChunkDocFreq at any corpus size.
     */
-  private[graft] def phashPairsAll(hashes: DataFrame): DataFrame = {
+  private def phashPairsAll(hashes: DataFrame): DataFrame = {
     val chunks = phashIndexChunks(hashes)
     chunks.toDF("doc_a", "ha", "c", "ck")
       .join(chunks.toDF("doc_b", "hb", "c2", "ck2"),

@@ -155,6 +155,15 @@ class GlobalOrderSpec extends AnyFunSuite {
     assert(collectSorted(got, "id") == collectSorted(want, "id"))
   }
 
+  test("lead1 rejects a non-atomic lead column, naming it and its type") {
+    val df = frame(50).withColumn("arr", array(col("v")))
+    val e = intercept[IllegalArgumentException] {
+      GlobalOrder.lead1(df, col("k"), Seq(col("id")), Seq("v", "arr"))
+    }
+    assert(e.getMessage.contains("'arr'") && e.getMessage.contains("array<bigint>"),
+      e.getMessage)
+  }
+
   test("histogram-equalized buckets stay balanced under heavy key clustering") {
     atFan(32) {
     import spark.implicits._
@@ -296,5 +305,28 @@ class GlobalOrderSpec extends AnyFunSuite {
       graft.engine.ops.SuffixArray.ranksFromWords(pos, 3, 1)
         .select("doc_id", "p", "rk", "rk_bound"), "doc_id", "p"))
     assert(suffixAt(32) == suffixAt(256), "suffix-array fan variance")
+  }
+
+  test("equalized pass-1 word buckets beat first-char buckets, within 2/fan of the tie share") {
+    import graft.engine.ops.SuffixArray
+    // the sf0.01 corpus words: first letters crowd onto a few values, as
+    // natural text does; the boundaries the string pass uses must bound
+    // the hottest bucket near the irreducible packed-prefix tie share
+    val pos = graft.engine.Tables.documents(spark, "/root/testdata/sf0.01")
+      .selectExpr("explode(filter(split(lower(text), ' '), w -> w <> '')) AS w")
+    val fan = 32
+    def hottestShare(bucket: org.apache.spark.sql.Column): Double = {
+      val r = pos.withColumn("_pk", expr(SuffixArray.PackedPrefixSql))
+        .groupBy(bucket.as("_b")).agg(count(lit(1)).as("n"))
+        .agg(max(col("n")), sum(col("n"))).head
+      r.getLong(0).toDouble / r.getLong(1)
+    }
+    val firstChar = hottestShare(expr("ascii(substring(w, 1, 1))"))
+    val equalized = hottestShare(SuffixArray.wordBucket(SuffixArray.wordBoundaries(pos, fan)))
+    val tie = hottestShare(col("_pk"))
+    assert(equalized < firstChar,
+      f"equalized hottest bucket $equalized%.3f must beat first-char $firstChar%.3f")
+    assert(equalized <= tie + 2.0 / fan,
+      f"equalized hottest bucket $equalized%.3f exceeds tie share $tie%.3f + 2/$fan")
   }
 }

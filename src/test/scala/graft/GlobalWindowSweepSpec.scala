@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,8 +25,6 @@ import graft.queries._
   *                         (value grids, day grids, enums, the <=32-row
   *                         `_gb`/`_b` bucket frames of GlobalOrder /
   *                         SuffixArray) — or if its own input is bounded;
-  *   - Filter(_grn = 1) -> bounded (one row per bucket: GlobalOrder.lead1's
-  *                         first-per-bucket frame, <= 32 rows);
   *   - Join             -> bounded iff both sides are;
   *   - Union            -> bounded iff all children are;
   *   - local/range rels -> bounded (literal data);
@@ -90,23 +87,6 @@ class GlobalWindowSweepSpec extends AnyFunSuite {
     } finally src.close()
   }
 
-  /** One row per bucket: GlobalOrder.lead1's `_grn = 1` first-per-bucket
-    * filter (the partitioned row_number below it bounds the frame at one
-    * row per `_gb` value).
-    */
-  private def isFirstPerBucket(cond: Expression): Boolean = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    conjuncts(cond).exists {
-      case EqualTo(a: AttributeReference, Literal(1, _)) => a.name == "_grn"
-      case EqualTo(Literal(1, _), a: AttributeReference) => a.name == "_grn"
-      case _ => false
-    }
-  }
-
   private def boundedRelation(p: LogicalPlan): Boolean = {
     // spec-bounded TPC-H dims only (region 5 rows, nation 25)
     val s = p.simpleString(200)
@@ -118,7 +98,6 @@ class GlobalWindowSweepSpec extends AnyFunSuite {
     case a: Aggregate =>
       a.groupingExpressions.forall(_.references.forall(r =>
         whitelist.cols.contains(r.name))) || bounded(a.child)
-    case f: Filter => isFirstPerBucket(f.condition) || bounded(f.child)
     case j: Join => bounded(j.left) && bounded(j.right)
     case u: Union => u.children.forall(bounded)
     case _: LocalRelation | _: OneRowRelation | _: Range => true

@@ -174,4 +174,20 @@ class LadderRecallSpec extends AnyFunSuite {
       s"cluster-level recall broke: $split of $nTruth true near-dup pairs " +
         "fall in different (or no) clusters — family connectivity lost")
   }
+
+  test("exact all-pairs Jaccard finds no >= 0.5 pair that LSH banding missed at sf0.01") {
+    // the unrestricted quadratic baseline no declared query runs: every
+    // co-shingled pair at jacc >= 0.5 must also be a dedup_minhash_pairs row
+    val sf = "/root/testdata/sf0.01"
+    val exact = graft.queries.Dedup.jaccardAllPairs(spark, sf)
+      .where("jacc >= 0.5").select(col("doc_a"), col("doc_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = SparkEntry.queries("dedup_minhash_pairs")(spark, sf)
+      .select(col("doc_a"), col("doc_b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(exact.nonEmpty, "sf0.01 must hold near-dup pairs")
+    val missed = exact.diff(lsh)
+    assert(missed.isEmpty,
+      s"${missed.size} of ${exact.size} exact pairs missed by LSH: ${missed.take(5)}")
+  }
 }

@@ -562,4 +562,26 @@ class OperatorInvariantsSpec extends AnyFunSuite {
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
       ((n1, n2, u2, aucE6)))
   }
+
+  test("dedup incremental: every incoming doc with a verbatim copy in the index is a dup at jacc 1.0") {
+    // 500 docs x 4 replicas: reps 0-2 verbatim, rep 3 with a marker
+    // token between every word (shingles disjoint from the others). Rep
+    // 0 is the incoming batch, reps 1-3 the index it probes
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr_").toString
+    graft.engine.util.Fs.deleteOnExit(java.nio.file.Paths.get(dir))
+    graft.engine.Tables.documents(spark, d)
+      .crossJoin(spark.range(4).toDF("rep"))
+      .selectExpr("doc_id * 100 + rep AS doc_id",
+        """CASE WHEN rep < 3 THEN text
+           ELSE regexp_replace(text, ' ', concat(' r', CAST(rep AS STRING), ' ')) END AS text""",
+        "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val v = graft.queries.Dedup.incrementalVerdicts(spark, dir,
+        "doc_id % 100 = 0", "doc_id % 100 <> 0")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(3)))
+    assert(v.length == graft.engine.Tables.documents(spark, d).count())
+    val missed = v.filterNot { case (_, verdict, jaccBp) => verdict == "dup" && jaccBp == 10000L }
+    assert(missed.isEmpty,
+      s"${missed.length} incoming docs not matched to their verbatim copy: ${missed.take(5).toSeq}")
+  }
 }

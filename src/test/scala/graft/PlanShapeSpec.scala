@@ -325,7 +325,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("wide-band LSH near-dup agrees with brute force and stays equi-joined") {
-    // the corpus-size dial StressCheck drives at 50k vectors: verify on
+    // the corpus-size dial measured at 50k vectors (SURVEY.md §8.9): verify on
     // a small deterministic frame that (a) the candidate join is an
     // equi-join (no cartesian escape at ANY band width) and (b) the
     // wide-band variant finds exactly the brute-force >= threshold

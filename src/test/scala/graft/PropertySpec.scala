@@ -115,7 +115,9 @@ class PropertySpec extends AnyFunSuite {
       val base = (1 to 12).map { i =>
         (i.toLong, Vector.fill(1 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.size))))
       }
-      val docs = base ++ Seq((100L, base.head._2), (101L, base(1)._2))
+      // docs 1, 100 and 102 are a verbatim triple: their suffixes must
+      // tie position for position to the last round
+      val docs = base ++ Seq((100L, base.head._2), (101L, base(1)._2), (102L, base.head._2))
       val wordRank: Map[String, Long] = docs.flatMap(_._2).distinct
         .sorted(cpOrdering)
         .zipWithIndex.map { case (w, i) => w -> (i + 1L) }.toMap
