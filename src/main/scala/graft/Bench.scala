@@ -27,8 +27,8 @@ object Bench {
       val small = new java.io.File("/root/testdata/sf0.001")
       if (small.isDirectory) small.getPath else sfDir
     }
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    SparkEntry.queries.foreach { case (name, fn) =>
+      try fn(spark, warmDir).count() catch { case e: Throwable => reportFailure(name, e) }
       spark.catalog.clearCache()
     }
     // drop warm-SF shared-tier frames (keyed by warmDir, useless at the
@@ -75,11 +75,13 @@ object Bench {
     // <2s); the min discards whichever run a load spike hit. Streaming
     // roundtrips rebuild their state/temp trees per run, so the second
     // run re-pays the full real cost — no warm-cache flattery.
-    def timedRun(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timedRun(name: String): Double = {
+      val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+      val failure = try { fn(spark, sfDir).count(); None }
+                    catch { case e: Throwable => Some(e) }
       val elapsed = (System.nanoTime() - t0) / 1e9
+      failure.foreach(reportFailure(name, _))
       // release any frames a query persisted (outside the timed region),
       // so later queries aren't squeezed by accumulated cache. Registry
       // drain only (r10): the old clearCache hammer also evicted the
@@ -88,7 +90,7 @@ object Bench {
       // is in the registry and engine ops self-unpersist their internals,
       // so drain() alone releases the per-query footprint
       graft.queries.Persisted.drain()
-      if (ok) elapsed else -1.0
+      if (failure.isEmpty) elapsed else -1.0
     }
     // dev ergonomics: SPARK_GRAFT_ONLY=prefix1,prefix2 times only matching
     // queries (the driver never sets it, so driver runs time everything)
@@ -96,16 +98,16 @@ object Bench {
       .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val results = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-      .map { case (name, fn) =>
+      .map { case (name, _) =>
       // self-healing: when the two timings diverge >2x, one of them was
       // hit by a background-load spike — a third run arbitrates so no
       // recorded number is a one-shot artifact (r6/r7 judge ask)
-      val a = timedRun(fn)
-      val b = timedRun(fn)
+      val a = timedRun(name)
+      val b = timedRun(name)
       val best =
         if (a < 0 || b < 0) -1.0
         else if (math.max(a, b) > 2.0 * math.min(a, b)) {
-          val c = timedRun(fn)
+          val c = timedRun(name)
           if (c < 0) -1.0 else math.min(c, math.min(a, b))
         } else math.min(a, b)
       // per-query progress on stderr (r16): a multi-hour scale-notch
@@ -123,29 +125,17 @@ object Bench {
     // run and demote flags that return to baseline (the r12 run's 8
     // flags were all box-load artifacts the judge had to clear by hand).
     val priorQueries: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_FULL.json")))
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = m.readTree(txt)
-        // gate only against a prior run at the SAME scale factor: a
-        // dev run at another SF would flood the gate with spurious 2x
-        // moves (or mask real ones after overwriting the file)
-        if (root.path("sf").asText("") != sfDir) Map.empty
-        else {
-          val node = root.path("queries")
-          val it = node.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-      } catch { case _: Throwable => Map.empty }
+      BenchGate.loadPrior(java.nio.file.Paths.get("BENCH_FULL.json"), sfDir) match {
+        case Right(m) => m
+        case Left(reason) =>
+          System.err.println(s"[bench] gate disarmed: $reason")
+          Map.empty
+      }
     // serial adjudication pass: min-of-2 re-measure per flagged query,
     // after the main pass's load transient has drained
     val flags = BenchGate.adjudicate(results, priorQueries, { name =>
-      val fn = SparkEntry.queries(name)
-      val a = timedRun(fn)
-      val b = timedRun(fn)
+      val a = timedRun(name)
+      val b = timedRun(name)
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
     })
     // report the adjudicated number for flagged queries (a demoted
@@ -218,4 +208,8 @@ object Bench {
     graft.queries.Persisted.drainShared()
     spark.stop()
   }
+
+  /** A failed query still records -1; this says why, on stderr. */
+  private def reportFailure(name: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
 }

@@ -105,6 +105,29 @@ object BenchGate {
       Flag(k, p, first, r, now, l, status)
     }
 
+  /** The prior full-surface run's per-query timings from `path`, or the
+    * reason the gate has nothing to compare against: the file is
+    * unreadable, unparsable, or from another scale factor (a run at
+    * another SF would flood the gate with spurious 2x moves, or mask
+    * real ones).
+    */
+  def loadPrior(path: java.nio.file.Path, sfDir: String): Either[String, Map[String, Double]] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Try(java.nio.file.Files.readString(path)).toEither.left
+      .map(e => s"prior $path unreadable: $e")
+      .flatMap { txt =>
+        scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt))
+          .toOption.filter(_.path("queries").isObject)
+          .toRight(s"prior $path unparsable: no JSON object with a queries map")
+      }
+      .flatMap { root =>
+        val sf = root.path("sf").asText("")
+        if (sf != sfDir) Left(s"prior $path is at sf '$sf', this run at '$sfDir'")
+        else Right(root.path("queries").properties().asScala
+          .map(e => e.getKey -> e.getValue.asDouble()).toMap)
+      }
+  }
+
   /** 1-minute system load average, or -1 when the platform hides it. */
   def loadAvg(): Double =
     java.lang.management.ManagementFactory

@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
   *      PRIMARY key);
   *   2. run the window WITHIN each bucket in parallel
   *      (`Window.partitionBy(_gb)`);
-  *   3. stitch buckets with a per-bucket offset frame — at most `fan`
-  *      rows, one per non-empty bucket — which is the only place an
-  *      unpartitioned window remains (bounded by construction; the
-  *      global-window plan sweep whitelists exactly this `_gb`
-  *      shape).
+  *   3. stitch buckets with per-bucket offsets: at most `fan` rows,
+  *      one per non-empty bucket, collected to the driver and spliced
+  *      back as literals ([[DriverLit]]) — no unpartitioned window
+  *      remains anywhere in the plan.
   *
   * Companion of [[SuffixArray.ranks]]'s internal pass (which buckets by a
   * previous dense rank); these generalize to any long-typed sort key.
@@ -90,34 +89,6 @@ object GlobalOrder {
     else graft.engine.Persisted.add(df)
   }
 
-  /** Bucket column over a pre-projected `_gok` long key from a
-    * DRIVER-LITERAL boundary array (r18, guide §2.4/§1.2 — the
-    * SuffixArray.bucketBy discipline): the count of boundaries strictly
-    * below the key, by codegen'd binary search over the sorted literal
-    * array (graft_bucket — O(log fan) per row at any fan, where a
-    * straight-line CASE sum stops being JIT-compiled past ~128 terms).
-    * Value-identical to the old broadcast-array filter fold.
-    */
-  private def bucketLit(bnds: Seq[Long]): Column =
-    if (bnds.isEmpty) lit(0L)
-    else expr(s"graft_bucket(_gok, array(${bnds.map(_ + "L").mkString(",")}))")
-
-  /** Per-bucket offset rows inlined as a literal-map lookup (the
-    * SuffixArray.stitchPass1 discipline): `coalesce(map[_gb], 0)`.
-    * At most `fan` entries — driver-trivial at any corpus size.
-    */
-  private def offsetLit(offs: Seq[(Long, Long)]): Column =
-    if (offs.isEmpty) lit(0L)
-    else coalesce(element_at(
-      map(offs.flatMap { case (b, o) => Seq(lit(b), lit(o)) }: _*),
-      col("_gb").cast("long")), lit(0L))
-
-  /** Exclusive prefix sums over per-bucket totals sorted by bucket id. */
-  private def prefixOffsets(cnts: Seq[(Long, Long)]): Seq[(Long, Long)] = {
-    val sorted = cnts.sortBy(_._1)
-    sorted.map(_._1).zip(sorted.map(_._2).scanLeft(0L)(_ + _).init)
-  }
-
   /** Adds `_gb` (bucket) and `_gok` (the long key) over a [[cut]] keyed
     * frame (one evaluation, bounded re-analysis). Bucketing is
     * QUANTILE-EQUALIZED (r9; plain span scaling re-creates the
@@ -127,9 +98,9 @@ object GlobalOrder {
     * the i/fan row-share quantiles — collected to the driver and
     * re-embedded as literals (r18; the broadcast-crossJoin form paid an
     * extra AQE exchange job per helper) — and each row's bucket is the
-    * count of boundaries strictly below its key ([[bucketLit]]). Buckets
-    * therefore hold ~1/fan of the ROWS for ANY key distribution, up to key-VALUE
-    * granularity (an ultra-hot tied value is irreducible: equal keys
+    * count of boundaries strictly below its key ([[DriverLit.bucketOf]]).
+    * Buckets therefore hold ~1/fan of the ROWS for ANY key distribution,
+    * up to key-VALUE granularity (an ultra-hot tied value is irreducible: equal keys
     * must share a bucket, or tie-break ordering would split across the
     * seam — a 10M-row zipf frame measured 4% hottest-bucket share
     * against a 90% value cluster, SURVEY.md §8.14; GlobalOrderSpec pins
@@ -145,17 +116,9 @@ object GlobalOrder {
     * degenerate, and zipf keys).
     */
   private def bucketed(df: DataFrame, key: Column): DataFrame = {
-    // graft_bucket lives in the session function registry (idempotent)
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val buckets = fanOf(df)
     val keyed = cut(df.withColumn("_gok", key.cast("long")))
-    val bnds = if (buckets < 2) Seq.empty[Long] else {
-      val qs = (1 until buckets).map(i => i.toDouble / buckets).mkString(", ")
-      val row = keyed.agg(
-        expr(s"approx_percentile(_gok, array($qs), 10000)")).head
-      if (row.isNullAt(0)) Seq.empty[Long] else row.getSeq[Long](0)
-    }
-    keyed.withColumn("_gb", bucketLit(bnds))
+    keyed.withColumn("_gb", DriverLit.bucketOf(col("_gok"),
+      DriverLit.boundaries(keyed, col("_gok"), fanOf(df))))
   }
 
   /** Test/diagnostic hook: the per-bucket row counts [[bucketed]] would
@@ -199,7 +162,7 @@ object GlobalOrder {
       .agg(count(lit(1)).as("_gcnt"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     df.withColumn("_glrn", row_number().over(wloc).cast("long"))
-      .withColumn(out, col("_glrn") + offsetLit(prefixOffsets(cnts)))
+      .withColumn(out, col("_glrn") + DriverLit.offsets("_gb", cnts))
       .drop("_glrn")
   }
 
@@ -259,7 +222,7 @@ object GlobalOrder {
     val res = idx.foldLeft(b) { (r, i) =>
       r.withColumn(values(i)._2,
         sum(values(i)._1).over(wloc).cast("long") +
-          offsetLit(prefixOffsets(perBucket(i))))
+          DriverLit.offsets("_gb", perBucket(i)))
     }.drop("_gok", "_gb")
     (res, idx.map(i => perBucket(i).map(_._2).sum))
   }
@@ -285,18 +248,12 @@ object GlobalOrder {
       .collect().map(r =>
         (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
       .toSeq.sortBy(_._1)
-    // exclusive prefix max per bucket: only buckets with a non-null
-    // PRIOR max get an entry (element_at misses = NULL, matching the
-    // old left-join's NULL for first/all-null-prior buckets)
-    val priorAll = maxes.zipWithIndex.flatMap { case ((bk, _), i) =>
-      val before = maxes.take(i).flatMap(_._2)
-      if (before.isEmpty) None else Some((bk, before.max))
-    }
-    val pmExpr =
-      if (priorAll.isEmpty) lit(null).cast("long")
-      else element_at(
-        map(priorAll.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
-        col("_gb"))
+    // exclusive prefix max per bucket: NULL where no earlier bucket
+    // holds a non-null value (the first bucket, all-null priors)
+    val noMax = lit(null).cast("long")
+    val pmExpr = DriverLit.lookup("_gb", maxes.indices.map { i =>
+      maxes(i)._1 -> maxes.take(i).flatMap(_._2).maxOption.fold(noMax)(lit)
+    }, noMax)
     // greatest skips NULLs (bucket-first rows, first bucket), returning
     // NULL only when both sides are — the global first row
     b.withColumn("_glmx", max(value).over(wlocX).cast("long"))
@@ -316,44 +273,34 @@ object GlobalOrder {
   /** Multi-metric [[ntileCol]]: every (n, key, out) spec's global ntile
     * over the SAME tie columns, sharing the expensive corpus-scale work
     * across metrics — ONE [[cut]] of the input, ONE aggregate producing
-    * every metric's 31-boundary array AND the total row count, ONE
-    * broadcast crossJoin attaching them (the RFM shape: three chained
-    * ntileCol calls each paid their own boundary pass, count pass, and
-    * two crossJoins — ~6 corpus passes where this makes 1 + one window
-    * per metric; the per-metric bucket window + fan-row offset stitch
-    * are irreducible because each metric orders the frame differently).
+    * every metric's boundary array AND the total row count, ONE exploded
+    * per-bucket count (the RFM shape: three chained ntileCol calls each
+    * paid their own boundary and count passes; the per-metric bucket
+    * window + fan-row offset stitch are irreducible because each metric
+    * orders the frame differently).
     * Value-identical to chaining [[ntileCol]]: each spec's ntile depends
     * only on its own (key, ties) order, never on another spec's output.
     */
   def ntileCols(df: DataFrame, ties: Seq[Column],
       specs: Seq[(Int, Column, String)]): DataFrame = {
-    // graft_bucket lives in the session function registry (idempotent)
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val idx = specs.indices
-    val buckets = fanOf(df)
     val keyed = cut(idx.foldLeft(df) { (b, i) =>
       b.withColumn(s"_gok$i", specs(i)._2.cast("long"))
     })
     // action 1: every metric's boundary array + the global row count,
-    // collected once and re-embedded as literals (r18 — the broadcast
+    // collected once and spliced back as literals (r18 — the broadcast
     // crossJoin form paid an AQE exchange job, and each metric's stitch
     // paid an eager checkpoint plus a broadcast-join: two jobs per
     // metric; offsets now come from the pre-window bucket counts, which
     // the window cannot change)
-    val qs = (1 until buckets).map(i => i.toDouble / buckets).mkString(", ")
     val bndRow = keyed.agg(
-      expr(s"approx_percentile(_gok0, array($qs), 10000)").as("_gbnd0"),
-      idx.drop(1).map(i =>
-        expr(s"approx_percentile(_gok$i, array($qs), 10000)").as(s"_gbnd$i")) :+
-        count(lit(1)).as("_gtot"): _*).head
+      DriverLit.sketch(col("_gok0"), fanOf(df)),
+      idx.drop(1).map(i => DriverLit.sketch(col(s"_gok$i"), fanOf(df))) :+
+        count(lit(1)): _*).head
     val tot = bndRow.getLong(idx.size)
     val withBuckets = idx.foldLeft(keyed) { (b, i) =>
-      val bnds =
-        if (bndRow.isNullAt(i)) Seq.empty[Long] else bndRow.getSeq[Long](i)
       b.withColumn(s"_gb$i",
-        if (bnds.isEmpty) lit(0L)
-        else expr(
-          s"graft_bucket(_gok$i, array(${bnds.map(_ + "L").mkString(",")}))"))
+        DriverLit.bucketOf(col(s"_gok$i"), DriverLit.bounds(bndRow, i)))
     }
     // action 2: every metric's per-bucket counts in ONE exploded pass
     // over the cached keyed frame (fan x specs rows to the driver)
@@ -362,27 +309,13 @@ object GlobalOrder {
       .groupBy(col("_ge._gsp").as("_gsp"), col("_ge._gbv").as("_gbv"))
       .agg(count(lit(1)).as("_gcnt"))
       .collect().map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
-    val offsBySpec = idx.map(i =>
-      prefixOffsets(cnts.collect { case (sp, e) if sp == i => e }.toSeq))
     val banded = idx.foldLeft(withBuckets) { (cur, i) =>
-      val n = specs(i)._1
       val wloc = Window.partitionBy(col(s"_gb$i"))
         .orderBy(col(s"_gok$i") +: ties: _*)
-      val offExpr =
-        if (offsBySpec(i).isEmpty) lit(0L)
-        else coalesce(element_at(
-          map(offsBySpec(i).flatMap { case (b, o) => Seq(lit(b), lit(o)) }: _*),
-          col(s"_gb$i")), lit(0L))
-      cur.withColumn("_gntrn",
-          row_number().over(wloc).cast("long") + offExpr)
-        .withColumn(specs(i)._3, expr(
-          // BIGINT literals: a bare INT literal would fold the
-          // (tot % n) * (tot div n + 1) product in 32-bit arithmetic
-          // and silently wrap for corpus-scale totals
-          s"""CASE WHEN _gntrn <= (${tot}L % $n) * (${tot}L div $n + 1)
-                THEN (_gntrn - 1) div (${tot}L div $n + 1) + 1
-                ELSE (${tot}L % $n) + (_gntrn - 1 - (${tot}L % $n) * (${tot}L div $n + 1))
-                       div greatest(${tot}L div $n, 1) + 1 END"""))
+      val offs = DriverLit.offsets(s"_gb$i",
+        cnts.collect { case (sp, e) if sp == i => e }.toSeq)
+      cur.withColumn("_gntrn", row_number().over(wloc).cast("long") + offs)
+        .withColumn(specs(i)._3, DriverLit.ntile(col("_gntrn"), tot, specs(i)._1))
         .drop("_gntrn")
     }
     banded.drop(idx.flatMap(i => Seq(s"_gok$i", s"_gb$i")): _*)
@@ -400,21 +333,25 @@ object GlobalOrder {
     */
   def lead1(df: DataFrame, key: Column, ties: Seq[Column],
       leadCols: Seq[String], suffix: String = "_nx"): DataFrame =
-    lead1Impl(bucketed(df, key), col("_gok") +: ties, leadCols, suffix)
+    lead1Impl(bucketed(df, key), "_gb", col("_gok") +: ties, leadCols, suffix)
 
   /** As [[lead1]], but with a CALLER-SUPPLIED bucket column instead of
     * the quantile sketch — for keys the caller knows to be near-uniform
     * (e.g. suffix-array ranks over 1..N, whose producer exports `_sab`),
     * where the approx_percentile pass is a pure extra corpus aggregate.
     * The caller owns the contract: `bucket` must be a monotone function
-    * of the (key, ties) order that never splits key ties.
+    * of the (key, ties) order that never splits key ties, with ids in
+    * [0, 65536) — an id outside throws IllegalArgumentException naming
+    * `bucket`.
     */
   def lead1With(df: DataFrame, bucket: Column, sort: Seq[Column],
       leadCols: Seq[String], suffix: String = "_nx"): DataFrame =
     lead1Impl(cut(df.withColumn("_gok", lit(0L))
-      .withColumn("_gb", bucket.cast("long"))), sort, leadCols, suffix)
+      .withColumn("_gb", bucket.cast("long"))), bucket.toString, sort,
+      leadCols, suffix)
 
-  private def lead1Impl(bdf: DataFrame, sort: Seq[Column],
+  /** `label` names the bucket column in [[DriverLit.lookup]]'s id check. */
+  private def lead1Impl(bdf: DataFrame, label: String, sort: Seq[Column],
       leadCols: Seq[String], suffix: String): DataFrame = {
     // lead columns must be atomic: the seam patch re-embeds their
     // values as typed literals, which arrays and structs do not survive
@@ -443,25 +380,20 @@ object GlobalOrder {
     val firstRows = bdf
       .groupBy(col("_gb").cast("long").as("_gbl"))
       .agg(min_by(struct(leadCols.map(col): _*), struct(sort: _*)).as("_gfx"))
-      .collect().map(r => (r.getLong(0), r.getStruct(1))).sortBy(_._1)
+      .collect().map(r => (r.getLong(0), r.getStruct(1))).toSeq.sortBy(_._1)
     // bucket -> the NEXT non-empty bucket's first row (empty buckets
-    // have no seam rows, so consecutive-present pairing bridges them)
-    val nexts = firstRows.sliding(2).collect {
-      case Array((b, _), (_, nxt)) => (b, nxt)
-    }.toSeq
-    // literal-MAP lookup, not a CASE chain (r18): fan-1 whens per lead
-    // column blew the generated method past the 64KB Janino limit at a
-    // 256 fan and the whole stage fell back to interpreted execution;
-    // a constant-folded map is one expression node, and element_at
-    // only evaluates on seam rows. NULL next-values are simply absent
-    // from the map — an element_at miss IS null.
+    // have no seam rows, so consecutive-present pairing bridges them);
+    // the last bucket's seam row is the global last row, whose lead is
+    // NULL. One literal lookup, not a CASE chain (r18): fan-1 whens per
+    // lead column blew the generated method past the 64KB Janino limit
+    // at a 256 fan; the lookup only evaluates on seam rows.
+    val nexts = firstRows.map(_._1).zip(firstRows.drop(1).map(f => Option(f._2)) :+ None)
     def patchFor(c: String, j: Int): Column = {
       val dt = bdf.schema(c).dataType
-      val entries = nexts.collect { case (b, row) if !row.isNullAt(j) =>
-        Seq(lit(b), lit(row.get(j)).cast(dt))
-      }.flatten
-      if (entries.isEmpty) lit(null).cast(dt)
-      else element_at(map(entries: _*), col("_gb").cast("long"))
+      val none = lit(null).cast(dt)
+      DriverLit.lookup("_gb", nexts.map { case (b, row) =>
+        b -> row.filterNot(_.isNullAt(j)).fold(none)(r => lit(r.get(j)).cast(dt))
+      }, none, label)
     }
     val withSent = bdf.withColumn("_ghn", lead(lit(1), 1).over(wloc))
     leadCols.zipWithIndex.foldLeft(withSent) { case (b, (c, j)) =>

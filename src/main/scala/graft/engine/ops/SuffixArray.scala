@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * then 16 → 128. Each pass buckets by the previous rank (a monotone
   * key, so classes never span buckets), ranks each bucket in parallel,
   * and stitches with driver-side row-count offsets (a fan-row collect
-  * and a literal-map lookup — no second corpus job; the fan follows
-  * `spark.sql.shuffle.partitions`, see [[GlobalOrder.fanOf]]). Pass widths are
+  * and a [[DriverLit]] lookup — no second corpus job; the fan follows
+  * `spark.sql.shuffle.partitions`, see [[passFan]]). Pass widths are
   * chosen so the `boundRound` span lands exactly on a pass boundary,
   * where the bound rank is simply that pass's output rank.
   * Passes stop at the prefix-doubling FIXPOINT: a pass that splits no
@@ -88,8 +88,6 @@ object SuffixArray {
     * any order-isomorphic round-0 key yields the same rank() values.
     */
   def ranksFromWords(pos: DataFrame, rounds: Int, boundRound: Int): DataFrame = {
-    // graft_bucket lives in the session function registry (idempotent)
-    graft.functions.GraftFunctions.register(pos.sparkSession)
     // no meaningful zero-pass result exists in word mode (ranks() can
     // hand back its numeric round-0 rk; a word column cannot be one)
     require(rounds >= 1, "ranksFromWords needs at least one pass")
@@ -154,23 +152,10 @@ object SuffixArray {
     // re-running the caller's tokenize lineage
     passes(posD, rounds, boundRound, firstKey = "w",
       firstBucket = Some { (boundarySrc, paired) =>
-        // pass-1 fan = 8x the shuffle parallelism (r18, guide §2.5 — see
-        // the dictionary path's note), capped at 512 (r12 ADVICE #3):
-        // the bucket column is a straight-line sum of `fan-1` literal
-        // comparisons, and at cluster-scale session fans (thousands) the
-        // generated whole-stage method would exceed the 64KB JVM limit
-        // and fall back to interpreted evaluation — recreating the
-        // serial map-side hot spot the straight-line form exists to
-        // avoid.
-        val fan = math.min(512, 8 * GlobalOrder.fanOf(boundarySrc))
-        val bnds = wordBoundaries(boundarySrc, fan)
-        // the packed prefix is PROJECTED ONCE and each comparison binds
-        // the materialized column (r12 ADVICE #3: the inlined form
-        // re-evaluated PackedPrefixSql twice per CASE term). The
-        // multi-use non-cheap alias blocks CollapseProject from
-        // re-inlining it, so codegen evaluates the prefix once per row.
+        val bnds = wordBoundaries(boundarySrc, passFan(boundarySrc))
+        // the packed prefix is PROJECTED ONCE, then bucketed
         paired.withColumn("_pk", expr(PackedPrefixSql))
-          .withColumn("_b", wordBucket(bnds))
+          .withColumn("_b", DriverLit.bucketOf(col("_pk"), bnds))
           .drop("_pk")
       },
       firstSentinel = lit(""),
@@ -184,6 +169,18 @@ object SuffixArray {
     * tuple components per long (sort width 6 longs, vs 16 strings).
     */
   private[graft] val DictVocabMax: Long = 1L << 20
+
+  /** Pass bucket fan: 8x the shuffle parallelism (r18, guide §2.5). With
+    * fan == partition count, hashing bucket ids into the shuffle
+    * partitions is balls-in-bins — the fullest task carries 3-4 buckets
+    * and the rank window straggles on it; 8x more buckets than
+    * partitions bounds that collision variance and keeps each bucket's
+    * sort run small enough to stay in memory. The 512 cap bounds what
+    * the driver handles per pass — the per-bucket counts collect and the
+    * literal boundary and offset arrays — at cluster-scale parallelism.
+    * Values are fan-invariant (GlobalOrderSpec pins it).
+    */
+  private def passFan(df: DataFrame): Int = math.min(512, 8 * GlobalOrder.fanOf(df))
 
   /** Dictionary-mode pass 1 + tie refinement (see the
     * [[ranksFromWords]] note): words become dense 1..V ranks, the
@@ -215,16 +212,6 @@ object SuffixArray {
         g.zipWithIndex.map { case (c, j) =>
           shiftleft(c, bpc * (g.size - 1 - j)) }.reduce(_ + _).as(s"_pk$gi")
       }
-    // fan = 8x the shuffle parallelism, capped at 512 (r18, guide §2.5:
-    // with fan == partition count, hashing the bucket ids into the
-    // shuffle partitions is balls-in-bins — the fullest task carries
-    // 3-4 buckets and the rank window straggles on it; 8x more buckets
-    // than partitions bounds the collision variance AND keeps each
-    // per-bucket sort run small enough to stay in memory. The 512 cap
-    // is the r12 codegen guard: the bucket column is a straight-line
-    // sum of fan-1 literal comparisons under the 64KB method limit.
-    // Values are fan-invariant — GlobalOrderSpec pins it.)
-    val fan = math.min(512, 8 * GlobalOrder.fanOf(enc))
     // boundaries from a 10%-OF-DOCS mini window over just the first
     // packed group (boundaries only steer load balance — any monotone
     // set yields identical ranks — so a deterministic doc subset is as
@@ -239,15 +226,8 @@ object SuffixArray {
     // exact sketch in ONE job: the mini frame is already a 10% subset,
     // so longBoundaries' sample-then-fallback would only add a second
     // window execution (its fallback always fires at gate-corpus sizes)
-    // fan == 1 (reachable via the FanConf test override) means a single
-    // bucket and zero boundaries — approx_percentile over array() fails
-    // analysis, so skip the aggregate entirely (r17 ADVICE)
-    val bnds = if (fan < 2) Seq.empty[Long] else {
-      val qs = (1 until fan).map(i => i.toDouble / fan).mkString(", ")
-      val bndsRow = mini.select(packGroups(miniComps).head.as("_pk"))
-        .agg(expr(s"approx_percentile(_pk, array($qs), 10000)")).head
-      if (bndsRow.isNullAt(0)) Seq.empty[Long] else bndsRow.getSeq[Long](0)
-    }
+    val bnds = DriverLit.boundaries(
+      mini.select(packGroups(miniComps).head.as("_pk")), col("_pk"), passFan(enc))
     var paired = enc
     for (i <- 1 until nComp)
       paired = paired.withColumn(s"_rkb$i",
@@ -265,7 +245,7 @@ object SuffixArray {
     // the 300x corpus)
     val local = paired.select(
         Seq(col("doc_id"), col("p"), col("gid")) ++ packs: _*)
-      .withColumn("_b", bucketBy(bnds, "_pk0"))
+      .withColumn("_b", DriverLit.bucketOf(col("_pk0"), bnds))
       .withColumn("_lrk", rank().over(wb).cast("long"))
       .withColumn("_csz", count(lit(1)).over(
         wb.rangeBetween(Window.currentRow, Window.currentRow)).cast("long"))
@@ -310,43 +290,12 @@ object SuffixArray {
     * [[ranksFromWords]]).
     */
   private[graft] def longBoundaries(base: DataFrame, fan: Int): Seq[Long] = {
-    val qs = (1 until fan).map(i => i.toDouble / fan).mkString(", ")
-    val sampled = base.sample(withReplacement = false, 0.1, seed = 42L)
-    val row = sampled.agg(
-      expr(s"approx_percentile(_pk, array($qs), 10000)").as("b"),
-      count(lit(1)).as("n")).head
-    val bndsSampled = if (row.isNullAt(0)) Nil else row.getSeq[Long](0)
+    val row = base.sample(withReplacement = false, 0.1, seed = 42L)
+      .agg(DriverLit.sketch(col("_pk"), fan), count(lit(1))).head
+    val bndsSampled = DriverLit.bounds(row, 0)
     if (bndsSampled.nonEmpty && row.getLong(1) >= 5000) bndsSampled
-    else {
-      val full = base.agg(
-        expr(s"approx_percentile(_pk, array($qs), 10000)")).head
-      if (full.isNullAt(0)) Nil else full.getSeq[Long](0)
-    }
+    else DriverLit.boundaries(base, col("_pk"), fan)
   }
-
-  /** The row-local bucket column for [[wordBoundaries]] output, over a
-    * pre-projected `_pk` packed-prefix column (see [[ranksFromWords]]).
-    * Codegen-friendly boundary count (NOT the filter-HOF GlobalOrder
-    * uses): this expression evaluates on the pre-shuffle map side,
-    * where the positions frame often sits in only a couple of input
-    * partitions — an interpreted lambda there is a serial hot spot
-    * (measured ~0.9s at sf0.1), while a straight-line sum of literal
-    * comparisons over one materialized column whole-stage-compiles to
-    * nothing.
-    */
-  private[graft] def wordBucket(bnds: Seq[Long]): org.apache.spark.sql.Column =
-    bucketBy(bnds, "_pk")
-
-  /** As [[wordBucket]], over a caller-named packed long column. Binary
-    * search over the sorted literal boundary array (r18, guide §2.5 —
-    * the graft_bucket expression): the old straight-line CASE sum is
-    * O(fan) per row and stops being JIT-compiled past ~128 terms, which
-    * measured 3x slower at a 256 fan over the 300x corpus. Identical
-    * values (count of boundaries strictly below the key).
-    */
-  private[graft] def bucketBy(bnds: Seq[Long], c: String): org.apache.spark.sql.Column =
-    if (bnds.isEmpty) lit(0L)
-    else expr(s"graft_bucket($c, array(${bnds.map(_ + "L").mkString(",")}))")
 
   /** Release the materialized blocks of a DEAD localCheckpoint (r18,
     * guide §5): a checkpointed frame's blocks otherwise live until the
@@ -454,20 +403,7 @@ object SuffixArray {
       .agg(count(lit(1)).as("_cnt"), countDistinct(col("_lrk")).as("_ncls"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
-    val offsets = cnts.map(_._1)
-      .zip(cnts.scanLeft(0L)(_ + _._2).init).toSeq
-    // dense-array lookup, O(1) per row (r18): bucket ids are 0..fan-1 by
-    // construction, and a literal-map element_at is a LINEAR scan per
-    // row — at a 512 fan over the 300x corpus that is ~10^10 wasted
-    // comparisons. Missing (empty) buckets get 0 — never looked up.
-    val offExpr =
-      if (offsets.isEmpty) lit(0L)
-      else {
-        val dense = new Array[Long](offsets.map(_._1).max.toInt + 1)
-        offsets.foreach { case (b, o) => dense(b.toInt) = o }
-        element_at(array(dense.map(lit(_)): _*),
-          (col("_b") + lit(1L)).cast("int"))
-      }
+    val offExpr = DriverLit.offsets("_b", cnts.map(c => c._1 -> c._2).toSeq)
     val cur = local.withColumn("rk", col("_lrk") + offExpr)
       .drop(dropCols ++ Seq("_b", "_lrk"): _*)
     (cur, cnts.map(_._2).sum, cnts.map(_._3).sum)
@@ -548,11 +484,9 @@ object SuffixArray {
     // quantile sketch over the corpus (see [[GlobalOrder.lead1With]]);
     // monotone in rk and ties share a bucket, the full bucketing
     // contract. totalRows is known from pass 1's stitch collect.
-    // 8x the shuffle parallelism like the pass fans (r18, guide §2.5):
-    // the consumer (GlobalOrder.lead1With) partitions its lead window by
-    // this bucket — with bucket count == partition count the collision
-    // skew makes one task sort 3-4 buckets' worth of positions
-    val fanOut = math.min(512, 8 * GlobalOrder.fanOf(cur))
+    // the pass fan: the consumer (GlobalOrder.lead1With) partitions its
+    // lead window by this bucket, so the same collision argument holds
+    val fanOut = passFan(cur)
     cur
       .withColumn("_sab",
         if (totalRows > 0) expr(s"((rk - 1) * $fanOut) div $totalRows")

@@ -129,6 +129,37 @@ class BenchGateSpec extends AnyFunSuite {
       flags2.head.remeasureLoad == 8.0)
   }
 
+  private def priorFile(body: String): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile("bench-prior", ".json")
+    f.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(f, body)
+  }
+
+  test("a prior run at the same sf arms the gate with its query timings") {
+    val f = priorFile("""{"sf":"/d/sf0.1","queries":{"a":1.5,"b":-1.0}}""")
+    assert(BenchGate.loadPrior(f, "/d/sf0.1") == Right(Map("a" -> 1.5, "b" -> -1.0)))
+  }
+
+  test("a missing prior disarms the gate, saying it is unreadable") {
+    val f = priorFile("{}")
+    java.nio.file.Files.delete(f)
+    val r = BenchGate.loadPrior(f, "/d/sf0.1")
+    assert(r.left.exists(_.contains("unreadable")), r)
+  }
+
+  test("an unparsable prior disarms the gate, saying so") {
+    for (body <- Seq("""{"sf":"/d/sf0.1","queries":""", "", """{"sf":"/d/sf0.1"}""")) {
+      val r = BenchGate.loadPrior(priorFile(body), "/d/sf0.1")
+      assert(r.left.exists(_.contains("unparsable")), s"$body -> $r")
+    }
+  }
+
+  test("a prior at another sf disarms the gate, naming both") {
+    val f = priorFile("""{"sf":"/d/sf0.01","queries":{"a":1.5}}""")
+    val r = BenchGate.loadPrior(f, "/d/sf0.1")
+    assert(r.left.exists(m => m.contains("'/d/sf0.01'") && m.contains("'/d/sf0.1'")), r)
+  }
+
   test("candidates are ordered worst absolute move first") {
     val prior = Map("a" -> 1.0, "b" -> 0.5, "c" -> 1.0)
     val results = Map("a" -> 3.0, "b" -> 4.0, "c" -> 1.1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.ops.GlobalOrder
+import graft.engine.ops.{DriverLit, GlobalOrder}
 
 /** GlobalOrder's bucketed two-pass helpers must be VALUE-IDENTICAL to the
   * single-task unpartitioned window they replace — on tie-heavy data
@@ -249,8 +249,9 @@ class GlobalOrderSpec extends AnyFunSuite {
   }
 
   test("the per-bucket windows are partitioned; only the offset stitch is not") {
-    // plan shape: the corpus-scale window must carry a partitionBy — the
-    // only unpartitioned window runs over the <=32-row offset frame
+    // plan shape: the corpus-scale window must carry a partitionBy, and
+    // since the offsets are driver literals no unpartitioned window
+    // remains at all
     val df = frame(500)
     val got = GlobalOrder.rowNumber(df, col("k"), Seq(col("id")), "rn")
     val windows = got.queryExecution.optimizedPlan.collect {
@@ -258,13 +259,49 @@ class GlobalOrderSpec extends AnyFunSuite {
     }
     assert(windows.nonEmpty)
     val unpart = windows.filter(_.partitionSpec.isEmpty)
-    // every unpartitioned window sits over the <=32-row bucket-offset
-    // aggregate (_gb)
-    assert(unpart.forall(_.child.collectFirst {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.groupingExpressions.forall(_.references.forall(r =>
-            r.name == "_gb")) => a
-    }.isDefined), "unpartitioned window must run over a bucket frame only")
+    assert(unpart.isEmpty, s"unpartitioned window in the plan: $unpart")
+  }
+
+  test("fan 1 is one bucket: no boundaries, still the window's values") {
+    val df = frame(200)
+    val w = Window.orderBy(col("k"), col("id"))
+    val want = df.withColumn("o", ntile(7).over(w).cast("long"))
+    val got = atFan(1)(collectSorted(
+      GlobalOrder.ntileCol(df, 7, col("k"), Seq(col("id")), "o"), "id"))
+    assert(got == collectSorted(want, "id"))
+    assert(atFan(1)(GlobalOrder.bucketCounts(df, col("k")).count()) == 1)
+  }
+
+  test("offset lookup reads per-bucket totals past 2^31 back as BIGINT") {
+    import spark.implicits._
+    val total = 3000000000L
+    val got = (0L until 4L).toDF("b")
+      .withColumn("off", DriverLit.offsets("b", (0L until 4L).map(_ -> total)))
+    assert(got.schema("off").dataType == org.apache.spark.sql.types.LongType)
+    assert(collectSorted(got, "b").map(_(1)) == Seq(0L, 3000000000L, 6000000000L, 9000000000L))
+  }
+
+  test("ntile arithmetic matches SQL ntile at a total past 2^32") {
+    val (tot, n) = (5000000001L, 7)
+    val (q, r) = (BigInt(tot) / n, BigInt(tot) % n)
+    // SQL ntile: the first r tiles hold q + 1 rows, the rest q
+    def want(rn: BigInt): BigInt =
+      if (rn <= r * (q + 1)) (rn - 1) / (q + 1) + 1
+      else r + (rn - 1 - r * (q + 1)) / q + 1
+    for (rn <- Seq(BigInt(1), r * (q + 1), r * (q + 1) + 1, BigInt(tot))) {
+      // a column, not a literal, so the plan evaluates it (no folding)
+      val got = spark.range(1).select((col("id") + rn.toLong).as("rn"))
+        .select(DriverLit.ntile(col("rn"), tot, n)).head
+      assert(BigInt(got.getLong(0)) == want(rn), s"rn=$rn")
+    }
+  }
+
+  test("lead1With rejects a negative caller bucket id, naming the column") {
+    val e = intercept[IllegalArgumentException] {
+      GlobalOrder.lead1With(frame(50).withColumn("kb", col("k") - 5L),
+        col("kb"), Seq(col("k"), col("id")), Seq("v"))
+    }
+    assert(e.getMessage.contains("bucket column kb holds id -"), e.getMessage)
   }
 
   test("fan sweep: fan 32 and fan 256 produce value-identical output (r12)") {
@@ -322,7 +359,8 @@ class GlobalOrderSpec extends AnyFunSuite {
       r.getLong(0).toDouble / r.getLong(1)
     }
     val firstChar = hottestShare(expr("ascii(substring(w, 1, 1))"))
-    val equalized = hottestShare(SuffixArray.wordBucket(SuffixArray.wordBoundaries(pos, fan)))
+    val equalized = hottestShare(
+      DriverLit.bucketOf(col("_pk"), SuffixArray.wordBoundaries(pos, fan)))
     val tie = hottestShare(col("_pk"))
     assert(equalized < firstChar,
       f"equalized hottest bucket $equalized%.3f must beat first-char $firstChar%.3f")

@@ -22,9 +22,8 @@ import graft.queries._
   *   - Limit            -> bounded (top-k output);
   *   - Aggregate        -> bounded if it groups on nothing (1 row) or
   *                         only on whitelisted bounded-domain columns
-  *                         (value grids, day grids, enums, the <=32-row
-  *                         `_gb`/`_b` bucket frames of GlobalOrder /
-  *                         SuffixArray) — or if its own input is bounded;
+  *                         (value grids, day grids, enums) — or if its
+  *                         own input is bounded;
   *   - Join             -> bounded iff both sides are;
   *   - Union            -> bounded iff all children are;
   *   - local/range rels -> bounded (literal data);
@@ -47,9 +46,9 @@ import graft.queries._
   * GlobalOrder internals, the iterative graph/suffix rounds) are not in
   * the final optimized plan this sweep walks. Those segments are audited
   * at their construction sites instead: GlobalOrderSpec's plan test pins
-  * "per-bucket windows partitioned, only the <=32-row offset stitch is
-  * not" on the helper itself, and the iterative ops' specs pin their
-  * per-round shapes.
+  * "per-bucket windows partitioned, no unpartitioned window left" on the
+  * helper itself (the offsets are driver literals), and the iterative
+  * ops' specs pin their per-round shapes.
   */
 class GlobalWindowSweepSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.engine.Sessions.local(4, "graft-test")

@@ -33,7 +33,13 @@ class JobCountGuardSpec extends AnyFunSuite {
     // checkpoint/broadcast): 23 -> 12, 19 -> 10, 15 -> 7 warm
     "events_rfm_segmentation" -> 14,
     "orders_abc_pareto" -> 12,
-    "dedup_source_overlap" -> 9)
+    "dedup_source_overlap" -> 9,
+    // the remaining GlobalOrder / SuffixArray helper callers: warm
+    // counts 11, 8, 9 and 32 before the driver-literal module
+    "skyline_parts" -> 13,
+    "events_power_gini" -> 10,
+    "stats_ks_two_sample" -> 11,
+    "dedup_suffix_repeats" -> 34)
 
   private def warmJobs(name: String): Int = {
     val d = "/root/testdata/sf0.1"
