@@ -293,9 +293,9 @@ object GlobalOrder {
     // paid an eager checkpoint plus a broadcast-join: two jobs per
     // metric; offsets now come from the pre-window bucket counts, which
     // the window cannot change)
-    val bndRow = keyed.agg(
-      DriverLit.sketch(col("_gok0"), fanOf(df)),
-      idx.drop(1).map(i => DriverLit.sketch(col(s"_gok$i"), fanOf(df))) :+
+    val fan = fanOf(df)
+    val bndRow = keyed.agg(DriverLit.sketch(col("_gok0"), fan),
+      idx.drop(1).map(i => DriverLit.sketch(col(s"_gok$i"), fan)) :+
         count(lit(1)): _*).head
     val tot = bndRow.getLong(idx.size)
     val withBuckets = idx.foldLeft(keyed) { (b, i) =>
