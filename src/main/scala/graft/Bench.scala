@@ -211,5 +211,5 @@ object Bench {
 
   /** A failed query still records -1; this says why, on stderr. */
   private def reportFailure(name: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+    System.err.println(SparkEntry.failureLine("bench", name, e))
 }

@@ -39,7 +39,6 @@ object CuratePipeline {
     val spark = graft.engine.Sessions.local(32, "graft-curate")
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = Files.createTempDirectory("graft_curated_").toString
-    graft.functions.GraftFunctions.register(spark)
 
     val raw = Tables.documents(spark, d)
     val total = raw.count()

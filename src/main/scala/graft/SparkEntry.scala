@@ -41,6 +41,13 @@ object SparkEntry {
       k -> ((s: SparkSession, d: String) => { Persisted.drain(); v.build(s, d) })
     }
 
+  /** The stderr line Verify and Bench print for a query that threw. It
+    * names the exception class, because a message alone can be `null`
+    * (an NPE's is).
+    */
+  def failureLine(main: String, name: String, e: Throwable): String =
+    s"[$main] $name FAILED: ${e.getClass.getName}: ${e.getMessage}"
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

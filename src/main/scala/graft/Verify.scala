@@ -36,7 +36,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(SparkEntry.failureLine("verify", name, e))
       }
       finally {
         // release per-query persisted frames: drain the registry (the

@@ -74,12 +74,17 @@ object Sessions {
   /** Build a local session with graft defaults. `cpus` drives both the
     * master thread count and the shuffle partition count — on local
     * mode there is no benefit to more shuffle partitions than cores.
+    * The engine's functions and optimizer rule arrive through
+    * [[graft.functions.GraftExtensions]] when the session is created; a
+    * later call returns the same session (`getOrCreate`), so they are
+    * installed once per session.
     */
   def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName(appName)
+      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -94,14 +99,6 @@ object Sessions {
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    // the library's optimizer surface (same rule GraftExtensions
-    // injects on the spark.sql.extensions path); append-if-absent so a
-    // getOrCreate-reused session stays idempotent WITHOUT clobbering
-    // optimizer rules user code installed before calling us
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRule
     spark
   }
 }

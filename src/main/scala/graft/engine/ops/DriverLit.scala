@@ -1,6 +1,6 @@
 package graft.engine.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** How a driver-collected bounded result goes back into a plan as
@@ -52,11 +52,7 @@ private[graft] object DriverLit {
     */
   def bucketOf(key: Column, bnds: Seq[Long]): Column =
     if (bnds.isEmpty) lit(0L)
-    else {
-      val s = SparkSession.active
-      if (!s.catalog.functionExists("graft_bucket")) graft.functions.GraftFunctions.register(s)
-      call_function("graft_bucket", key.cast("long"), typedLit(bnds))
-    }
+    else call_function("graft_bucket", key.cast("long"), typedLit(bnds))
 
   /** Per-bucket literal lookup: `entries` maps every bucket id the frame
     * holds to its value, and the result is `element_at(arr, bucket + 1)`

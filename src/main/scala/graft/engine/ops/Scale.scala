@@ -38,7 +38,6 @@ object Scale {
     // native codegen Morton key (bit-identical to Portable.sparkZ; the
     // z-key is computed for every row laid out, so the generated loop
     // beats the 16-term expression tree)
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("_z",
         expr(s"graft_morton(CAST($keyA AS BIGINT) & 65535, CAST($keyB AS BIGINT) & 65535)"))
       .repartitionByRange(files, col("_z"))

@@ -42,7 +42,6 @@ object DialedSigner {
     */
   def signBatch(s: SparkSession, batch: DataFrame,
       bronzeDir: String): (DataFrame, Int) = {
-    graft.functions.GraftFunctions.register(s)
     val bits = currentSimhashBits(s, bronzeDir)
     val mask = (1L << bits) - 1
     val hot = graft.queries.Dedup.hotShingleArrayFor(s, bronzeDir)

@@ -1,42 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: installs the engine's native
-  * expressions AND the range-join optimizer rule into any session built
-  * with `.withExtensions(new GraftExtensions)` or via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — the
-  * deployment path a cluster job would use instead of calling
-  * GraftFunctions.register by hand.
+/** SparkSessionExtensions entry point, the engine's one install path:
+  * injects every [[GraftFunctions.Table]] function and the range-join
+  * optimizer rule into a session built with
+  * `.withExtensions(new GraftExtensions)` (what `Sessions.local` does) or
+  * with `spark.sql.extensions=graft.functions.GraftExtensions` (a
+  * cluster job). Sessions derived from it by `newSession()` or
+  * `cloneSession()` inherit both.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_strhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_strhash"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => PolyHash(es.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[FloatDot].getName, "graft_dot"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => FloatDot(es.head, es(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingles"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => ShingleHashes(es.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => MinHashSig(es.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "graft_simhash"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SimHashSig(es.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_morton"),
-      new ExpressionInfo(classOf[MortonInterleave].getName, "graft_morton"),
-      (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => MortonInterleave(es.head, es(1))))
+    GraftFunctions.Table.foreach(ext.injectFunction)
   }
 }

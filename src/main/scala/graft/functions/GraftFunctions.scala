@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -22,17 +23,21 @@ object GraftFunctions {
 
   val Mod = 1000000007L
 
-  /** Register SQL-callable names on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_strhash", es => PolyHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot", es => FloatDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles", es => ShingleHashes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash", es => MinHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash", es => SimHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_phash", es => PHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_morton", es => MortonInterleave(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minus_sorted", es => MinusSorted(es.head, es(1)), "built-in")
+  /** The engine's SQL-callable functions, one `(name, info, builder)`
+    * entry each. [[GraftExtensions]] injects every entry, so every
+    * session built through it (`Sessions.local`, or
+    * `spark.sql.extensions` on a cluster) and every `newSession()` /
+    * `cloneSession()` of one has them from the start.
+    */
+  val Table: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("graft_strhash", classOf[PolyHash])(es => PolyHash(es.head)),
+    fn("graft_dot", classOf[FloatDot])(es => FloatDot(es.head, es(1))),
+    fn("graft_shingles", classOf[ShingleHashes])(es => ShingleHashes(es.head)),
+    fn("graft_minhash", classOf[MinHashSig])(es => MinHashSig(es.head)),
+    fn("graft_simhash", classOf[SimHashSig])(es => SimHashSig(es.head)),
+    fn("graft_phash", classOf[PHashSig])(es => PHashSig(es.head)),
+    fn("graft_morton", classOf[MortonInterleave])(es => MortonInterleave(es.head, es(1))),
+    fn("graft_minus_sorted", classOf[MinusSorted])(es => MinusSorted(es.head, es(1))),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
     // runtime-filter rule (SPARK-32268) but does NOT expose them in the
     // SQL registry; surfacing them under graft names turns the engine's
@@ -41,26 +46,37 @@ object GraftFunctions {
     // graft_might_contain(bloomBinary, longCol). Construction goes
     // through BloomShim — the internal constructors are the only
     // private-API surface in the library.
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      es => BloomShim.agg(es.head, es.drop(1).headOption), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      es => BloomShim.mightContain(es.head, es(1)), "built-in")
+    fn("graft_bloom_agg", BloomShim.getClass)(
+      es => BloomShim.agg(es.head, es.drop(1).headOption)),
+    fn("graft_might_contain", BloomShim.getClass)(
+      es => BloomShim.mightContain(es.head, es(1))),
     // quantile-boundary bucket id (r18, guide §2.5): the count of
     // sorted-ascending boundaries strictly below the key, by binary
     // search — O(log fan) per row where the straight-line CASE sum is
     // O(fan) AND stops being JIT-compiled past ~128 terms (HotSpot's
     // huge-method limit), which measured 3x slower at a 256 fan over
     // the 300x suffix corpus. Arity: graft_bucket(longCol, sortedArr).
-    reg.createOrReplaceTempFunction("graft_bucket",
-      es => BoundaryBucket(es.head, es(1)), "built-in")
+    fn("graft_bucket", classOf[BoundaryBucket])(es => BoundaryBucket(es.head, es(1))),
     // bounded top-k sum (r18, guide §5): sum of the k largest BIGINT
     // values per group with an O(k) aggregation buffer — the
     // collect_list/array_sort/slice form buffers every row of a group
     // before discarding all but k, so one skewed key at 100 TB pays
     // executor memory proportional to its candidate count. Arity:
     // graft_topk_sum(longCol, k) with k a literal INT.
-    reg.createOrReplaceTempFunction("graft_topk_sum",
-      es => TopKSumAgg(es.head, es(1)), "built-in")
+    fn("graft_topk_sum", classOf[TopKSumAgg])(es => TopKSumAgg(es.head, es(1))))
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Install the [[Table]] entries `spark` lacks (append-if-absent): a
+    * no-op on any session built with [[GraftExtensions]], and it never
+    * replaces a function the session already holds.
+    */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    Table.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
+    }
   }
 
   /** Single choke point for the Spark-INTERNAL bloom expressions

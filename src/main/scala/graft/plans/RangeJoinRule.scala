@@ -54,10 +54,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * rewritten join carries the `_rj_bin` equality, so the rule never
   * refires on its own output).
   *
-  * Registered through BOTH deployment paths: GraftExtensions
-  * (`spark.sql.extensions`, injectOptimizerRule) and
-  * `Sessions.local` (experimental.extraOptimizations), so every engine
-  * session ships it.
+  * Installed only through GraftExtensions (`injectOptimizerRule`), which
+  * `Sessions.local` and a `spark.sql.extensions` deployment both use, so
+  * it runs in Spark's operator-optimization batches on every engine
+  * session.
   */
 object RangeJoinRule extends Rule[LogicalPlan] {
 

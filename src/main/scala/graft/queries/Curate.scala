@@ -34,7 +34,6 @@ object Curate extends QueryPack {
   def defs: Map[String, QueryDef] = Map(
     "curate_funnel" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         // split is a pure row-local function of text, so compute it BEFORE
         // the anti-join: the dedup-drop shuffle then carries (doc_id,
@@ -323,7 +322,6 @@ object Curate extends QueryPack {
     // hashed bigram buckets); the plan is unchanged.
     "curate_dsir_select" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // tc-weighted over the shared unigram root (r11): the per-doc
         // score sums a QUANTIZED integer weight, so tc * lw_e6 equals
         // the per-occurrence sum exactly — values identical, oracle

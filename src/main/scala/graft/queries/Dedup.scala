@@ -227,7 +227,6 @@ object Dedup extends QueryPack {
     * straight over the document scan.
     */
   private def shingleArr(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .selectExpr("doc_id", s"${sparkWords("lower(text)")} AS ws")
       .where("size(ws) >= 3")
@@ -813,7 +812,6 @@ object Dedup extends QueryPack {
     // deterministic and bounded.
     "dedup_substring_spans" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(col("n_docs").desc, col("n_occ").desc, col("h"))
         Tables.documents(s, d)
@@ -2051,7 +2049,6 @@ object Dedup extends QueryPack {
     // filtered survivors.
     "dedup_suffix_repeats" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // construction lives in engine/ops/SuffixArray.scala (radix-16
         // prefix doubling, distributed bucketed rank() + per-pass
         // lineage cut); this query adds candidate extraction and the

@@ -708,7 +708,6 @@ object Ingest extends QueryPack {
     // from the same literal corpus.
     "stream_dedup_minhash_roundtrip" -> QueryDef(
       (s, _) => {
-        graft.functions.GraftFunctions.register(s)
         import s.implicits._
         val in = MemoryStream[(Long, String)](s)
         val sig = in.toDF().toDF("doc_id", "text")

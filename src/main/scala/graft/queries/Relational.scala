@@ -769,7 +769,6 @@ object Relational extends QueryPack {
       (s, d) => {
         // native codegen Morton key (bit-identical twin of the 16-term
         // Portable.sparkZ expression — FunctionsSpec pins the equality)
-        graft.functions.GraftFunctions.register(s)
         Tables.events(s, d)
           .where(col("event_id") < 500)
           .selectExpr("event_id", "user_id",
@@ -4374,7 +4373,6 @@ object Relational extends QueryPack {
     // per-row scaled cents before the sum — exact BIGINT, tie-safe.
     "join_bloom_prefilter" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // might_contain requires the bloom binary as a CONSTANT or
         // scalar subquery (it folds to a literal before codegen) — so
         // the build side is declared as a scalar subquery, exactly how

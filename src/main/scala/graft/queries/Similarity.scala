@@ -245,7 +245,6 @@ object Similarity extends QueryPack {
     * dot / (sqrt(na) * sqrt(nb)) on bit-identical inputs.
     */
   private def cosine(df: DataFrame, a: String, b: String): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("dot", expr(sparkDot(a, b)))
       .withColumn("na", expr(sparkDot(a, a)))
       .withColumn("nb", expr(sparkDot(b, b)))
@@ -285,7 +284,6 @@ object Similarity extends QueryPack {
     */
   private def rawBandRows(e: DataFrame, ppb: Int, bands: Int,
       withExt: Boolean, n: Long, mq: Array[Long]): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     def fields(b: Int) =
       Seq(s"${sparkBandKey(b, 0, ppb, n, mq)} AS key_$b") ++
         (if (withExt) Seq(s"${sparkBandKey(b, bands, ppb, n, mq)} AS ext_$b") else Nil)
@@ -340,7 +338,6 @@ object Similarity extends QueryPack {
   private def bandScored(
       e: DataFrame, planesPerBand: Int, bands: Int,
       hotCap: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     val (n, mq) = lshConsts(e)
     val raw = rawBandRows(e, planesPerBand, bands,
       withExt = hotCap != Long.MaxValue, n, mq)
@@ -423,7 +420,6 @@ object Similarity extends QueryPack {
       planesPerBand: Int, bands: Int, k: Int = 4,
       hotCap: Long = Long.MaxValue,
       consts: (Long, Array[Long])): DataFrame = {
-    graft.functions.GraftFunctions.register(a0.sparkSession)
     def keyed(df: DataFrame, id: String, vec: String, norm: String) =
       df.selectExpr(s"vec_id AS $id", s"embedding AS $vec",
         s"sqrt(${sparkDot("embedding", "embedding")}) AS $norm")
@@ -536,9 +532,7 @@ object Similarity extends QueryPack {
     * measured ~30x fewer candidates than the declared k=8 (SURVEY.md
     * §8.10).
     */
-  private def semdedupLedger(e0: DataFrame, k: Int, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(e0.sparkSession)
-    val e = e0
+  private def semdedupLedger(e: DataFrame, k: Int, tau: Double): DataFrame = {
     val cents = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
     val assigned = e.crossJoin(broadcast(cents))
@@ -573,7 +567,6 @@ object Similarity extends QueryPack {
     * don't thin out and the self-join stays linear).
     */
   private def bucketed(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (n, mq) = lshConstsCached(s, d)
     val w = Planes + lshExtraBits(n)
     Tables.embeddings(s, d)
@@ -722,7 +715,7 @@ object Similarity extends QueryPack {
       // applied by the declared query itself and mirrored by the
       // oracle's COUNT(*)-driven centroid cutoff.
       (s, d) => semdedupLedger(
-        { graft.functions.GraftFunctions.register(s); Tables.embeddings(s, d) },
+        Tables.embeddings(s, d),
         k = semdedupK(corpusN(s, d)), tau = 0.3),
       Some(s"""
         WITH cents AS (
@@ -888,7 +881,6 @@ object Similarity extends QueryPack {
     // Hamming ties broken by vec_id, rerank ties by vec_id.
     "sim_binary_quantize" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // Word count and offsets derive from Portable.Dim (Dim/32 sign
         // words) instead of a hardcoded two — out-of-range element_at
         // returns NULL, which would silently pack missing dimensions as
@@ -1198,7 +1190,6 @@ object Similarity extends QueryPack {
     // exactly the two-stage shape this query demonstrates.
     "sim_matryoshka" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         def dotK(a: String, b: String) = s"graft_dot(slice($a, 1, 16), slice($b, 1, 16))"
         val e = Tables.embeddings(s, d)
         val q = e.filter(col("vec_id") < 20)
@@ -1380,7 +1371,6 @@ object Similarity extends QueryPack {
         // centroid cell, queries probe ONLY their own cell. At cluster
         // scale the cell id is the shuffle/bucket key, so search cost is
         // corpus/NLIST per query instead of the full corpus.
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val cents = e.filter(col("vec_id") < NList)
           .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
@@ -1530,7 +1520,6 @@ object Similarity extends QueryPack {
     // same cell-id equi-join as sim_ivf_topk.
     "sim_ivf_nprobe" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val cents = e.filter(col("vec_id") < NList)
           .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
@@ -1598,7 +1587,6 @@ object Similarity extends QueryPack {
     // quadratic appears.
     "sim_ivf_trained" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val xi = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) + 2000000)"
         // DRIVER-SIDE codebook rounds (r11): the model is NList x Dim
         // integers — driver-bounded by construction (the nb-langid
@@ -2082,7 +2070,6 @@ object Similarity extends QueryPack {
     // restricted band join, never all-pairs.
     "embed_funnel" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val cents = e.filter(col("vec_id") < NList)
           .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
@@ -2272,7 +2259,6 @@ object Similarity extends QueryPack {
     // query.
     "sim_scalar_quantize" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val dims = e.select(posexplode(col("embedding")).as(Seq("i0", "x")))
           .groupBy(col("i0"))
@@ -2439,7 +2425,6 @@ object Similarity extends QueryPack {
     // §8.17).
     "sim_margin_bitext" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.embeddings(s, d)
         val a = e.where(expr("label % 2 = 0")).select(col("vec_id"), col("embedding"))
         val b = e.where(expr("label % 2 = 1")).select(col("vec_id"), col("embedding"))

@@ -134,7 +134,6 @@ object SourceFormats extends QueryPack {
     // extensions without opening files.
     "source_binaryfile_roundtrip" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val out = Files.createTempDirectory("graft_bin_")
         graft.engine.util.Fs.deleteOnExit(out)
         // FIXTURE-COLLECT CONTRACT (r12, r11 VERDICT #5): this collect

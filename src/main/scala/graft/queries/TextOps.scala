@@ -171,7 +171,6 @@ object TextOps extends QueryPack {
     * FunctionsSpec pins bit-identity against [[phashHashesHof]].
     */
   private[graft] def phashHashes(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .selectExpr("doc_id", s"${sparkWords("lower(text)")} AS ws")
       .selectExpr("doc_id", "graft_phash(ws) AS h")
@@ -182,7 +181,6 @@ object TextOps extends QueryPack {
     * Portable's HOF folds play for the other codegen expressions).
     */
   private[graft] def phashHashesHof(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val grid = Tables.documents(s, d)
       .selectExpr("doc_id", s"${sparkWords("lower(text)")} AS ws")
       .selectExpr("doc_id", s"$phSparkBins AS bs")
@@ -590,7 +588,6 @@ object TextOps extends QueryPack {
   def defs: Map[String, QueryDef] = Map(
     "text_fingerprint" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .selectExpr("doc_id", s"${sparkStrHash("text")} AS fp")
           .orderBy(col("doc_id"))
@@ -1283,7 +1280,6 @@ object TextOps extends QueryPack {
     // aggregate; the corpus is touched once.
     "text_feature_hashing" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         // distinct vocabulary from the shared unigram root (r11)
         val perBucket = docTermCounts(s, d)
           .select(col("term").as("w")).distinct()
@@ -1592,7 +1588,6 @@ object TextOps extends QueryPack {
     // sampling) — the curation primitive for carving corpus subsets.
     "sample_stratified" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .where(s"${sparkStrHash("text")} % 100 < 10")
           .groupBy(col("lang"))
@@ -1617,7 +1612,6 @@ object TextOps extends QueryPack {
     // float surface here.
     "sample_weighted" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(col("k").desc, col("doc_id"))
         Tables.documents(s, d)
@@ -1706,7 +1700,6 @@ object TextOps extends QueryPack {
     // counts.
     "text_bpe_encode" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .crossJoin(broadcast(bpeMergesFrame(s, d)))
           .selectExpr("doc_id", s"${sparkWords("lower(text)")} AS ws", "ms")
@@ -2075,7 +2068,6 @@ object TextOps extends QueryPack {
     // the identical cleaned string byte-for-byte.
     "text_normalize" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .selectExpr("doc_id",
             "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9]', ' '), ' +', ' ')) AS norm")
@@ -2152,7 +2144,6 @@ object TextOps extends QueryPack {
     // the probe side joins the tiny cell table back to the vocabulary.
     "sketch_countmin_terms" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val hash = (i: Int) => s"((${minHashA(i)} * th + ${minHashB(i)}) % $P) % $CmWidth"
         val stackExpr = (0 until CmDepth)
           .map(i => s"$i, ${hash(i)}").mkString(s"stack($CmDepth, ", ", ", ") AS (i, bucket)")
@@ -2206,7 +2197,6 @@ object TextOps extends QueryPack {
     // shuffle, the 100 TB shape for any per-document rewrite.
     "text_pii_redact" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .selectExpr("doc_id",
             "concat(text," +
@@ -2272,7 +2262,6 @@ object TextOps extends QueryPack {
 
     "split_train_eval" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.documents(s, d)
           .selectExpr("lang",
             s"""CASE WHEN ${sparkStrHash("text")} % 10 < 8 THEN 'train'

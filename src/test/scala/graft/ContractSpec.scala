@@ -28,6 +28,11 @@ class ContractSpec extends AnyFunSuite {
     assert(all.size == SparkEntry.queries.size)
   }
 
+  test("a failed query's line names the exception class, even with no message") {
+    val line = SparkEntry.failureLine("verify", "q", new NullPointerException())
+    assert(line == "[verify] q FAILED: java.lang.NullPointerException: null")
+  }
+
   test("every oracle has a query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty)

@@ -129,20 +129,4 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     val want = rows(joined)
     assert(rows(withBin(100000L)(joined)) == want)
   }
-
-  test("extensions deployment path also installs the rule") {
-    // GraftExtensions.apply injects the optimizer rule — assert directly
-    // on the extensions object rather than a second SparkContext (the
-    // ExtensionsCheck main covers the fresh-JVM conf path end to end)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    // buildOptimizerRules is private[sql]; reflection keeps this a
-    // same-JVM assert (the fresh-JVM conf path runs in ExtensionsCheck)
-    val m = classOf[org.apache.spark.sql.SparkSessionExtensions]
-      .getDeclaredMethods.find(_.getName == "buildOptimizerRules").get
-    m.setAccessible(true)
-    val rules = m.invoke(ext, spark).asInstanceOf[Seq[AnyRef]]
-    assert(rules.exists(_ eq graft.plans.RangeJoinRule),
-      "GraftExtensions must inject RangeJoinRule")
-  }
 }

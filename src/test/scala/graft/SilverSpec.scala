@@ -44,9 +44,4 @@ class SilverSpec extends AnyFunSuite {
     val silver = new EvolvingTableSink(root.resolve("silver").toString)
     assert(Silver.dedupEvents(silver.read(spark)).count() == silverCount)
   }
-
-  // GraftExtensions needs a session built before any other is active, so
-  // its check lives in a dedicated main (graft.ExtensionsCheck) run in a
-  // fresh JVM — a unit test here would silently reuse the shared test
-  // session and mask whether the injection worked.
 }
