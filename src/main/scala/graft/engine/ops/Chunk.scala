@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   * single (empty) chunk so downstream sample accounting sees every input
   * id.
   *
-  * The single chunking code path: the declared `chunk_documents` query,
-  * the end-to-end `CuratePipeline`, and the ContractSpec losslessness
-  * test all go through here, so the window/stride can never drift
-  * between the gated query and the pipeline that feeds trainers.
+  * The single chunking code path: the declared `chunk_documents` query
+  * and the ContractSpec losslessness test both go through here, so the
+  * window/stride the oracle checks is the one the lossless test holds.
   */
 object Chunk {
   /** Chars per chunk. */

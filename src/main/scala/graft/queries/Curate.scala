@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
 
-/** The composed corpus-curation funnel UNDER THE ORACLE GATE — the same
-  * stages CuratePipeline runs as a job, declared as one query emitting
+/** The composed corpus-curation funnel UNDER THE ORACLE GATE — quality
+  * filter, near-dup removal and split, declared as one query emitting
   * the stage-by-stage integer counts so the driver value-checks the
   * END-TO-END pipeline, not just its parts:
   *

@@ -321,8 +321,11 @@ object Ingest extends QueryPack {
     * separate batches. The sink's temp view is dropped on the way out,
     * also on failure: the frame resolved from it keeps reading the sink,
     * and a long-lived session would otherwise collect one view per run.
+    * No no-data micro-batches run (see `withStreamingPartitions`): what
+    * a watermark move emits, evicts or drops as late happens in the
+    * next DATA batch, so a step that needs it adds one.
     */
-  private def memoryRoundtrip(s: SparkSession, df: DataFrame, outputMode: String,
+  private[graft] def memoryRoundtrip(s: SparkSession, df: DataFrame, outputMode: String,
       trigger: Trigger = Trigger.ProcessingTime(0L))(
       steps: StreamingQuery => Unit): DataFrame = {
     val name = s"graft_rt_${java.util.UUID.randomUUID().toString.replace('-', '_')}"

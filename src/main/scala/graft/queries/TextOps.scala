@@ -2510,8 +2510,8 @@ object TextOps extends QueryPack {
     // 100, i.e. 20 overlap so no boundary token loses context), one
     // output row per chunk. The chunker itself (engine/ops/Chunk.scala)
     // is row-local generate+explode over the scan — no shuffle until
-    // the output sort — and is the same code path CuratePipeline feeds
-    // trainers from, so the gated arithmetic IS the production one.
+    // the output sort — and is the one chunking code path, so the gated
+    // arithmetic IS the production one.
     "chunk_documents" -> QueryDef(
       (s, d) => graft.engine.ops.Chunk.chunks(Tables.documents(s, d))
         .selectExpr("doc_id", "chunk_idx",

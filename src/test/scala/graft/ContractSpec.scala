@@ -97,4 +97,19 @@ class ContractSpec extends AnyFunSuite {
     SparkEntry.oracleSql.keys.take(5).foreach(k =>
       assert(node.has(k), s"missing oracle $k"))
   }
+
+  test("every runMain the docs name loads and has a main(Array[String])") {
+    // README and the verify skill tell a reader what to run; a deleted or
+    // renamed main must fail here, not in the reader's shell
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
+    val named = docs.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
+      """runMain\s+(graft\.[\w.]*\w)""".r.findAllMatchIn(text).map(m => f -> m.group(1))
+    }.distinct
+    assert(docs.forall(f => named.exists(_._1 == f)), s"no runMain found in one of $docs")
+    val broken = named.filterNot { case (_, cls) =>
+      scala.util.Try(Class.forName(cls).getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(broken.isEmpty, s"docs name mains that do not exist: ${broken.mkString(", ")}")
+  }
 }

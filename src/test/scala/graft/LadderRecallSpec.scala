@@ -34,6 +34,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     regression (fewer bands, broken cap, window arithmetic) pushes
   *     the miss rate far past 1%, while the documented S-curve tail
   *     stays under it.
+  *   - trained IVF: sim_ivf_trained's recall@3 against the exact cosine
+  *     top-3 on the sf0.1 embeddings is floored at its measured 34/60.
+  *     The trained codebook does not dominate the fixed one
+  *     (sim_ivf_topk gets 35/60 there), so the two are not ranked.
   *
   * First landed finding (r17): the audit's power check itself exposed
   * that shingle hashes are mod-1e9+7 (< 2^30), so simhash bits 30+ were
@@ -189,5 +193,16 @@ class LadderRecallSpec extends AnyFunSuite {
     val missed = exact.diff(lsh)
     assert(missed.isEmpty,
       s"${missed.size} of ${exact.size} exact pairs missed by LSH: ${missed.take(5)}")
+  }
+
+  test("trained IVF recall@3 against the exact cosine top-3 holds its sf0.1 floor") {
+    val sf = "/root/testdata/sf0.1"
+    def top3(name: String) = SparkEntry.queries(name)(spark, sf)
+      .where(col("rn") <= 3).select(col("qid"), col("vid"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = top3("sim_topk_cosine")
+    val hits = top3("sim_ivf_trained").intersect(exact).size
+    assert(exact.size == 60, s"exact top-3 of 20 queries: ${exact.size} rows")
+    assert(hits >= 34, s"sim_ivf_trained recall@3 $hits/60 fell below 34/60")
   }
 }

@@ -584,4 +584,13 @@ class OperatorInvariantsSpec extends AnyFunSuite {
     assert(missed.isEmpty,
       s"${missed.length} incoming docs not matched to their verbatim copy: ${missed.take(5).toSeq}")
   }
+
+  test("curate_funnel at sf0.01: no stage grows the corpus, and the splits sum to 3_dedup") {
+    // the oracle pins each count; this pins how they relate
+    val n = SparkEntry.queries("curate_funnel")(spark, "/root/testdata/sf0.01").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val splits = n.collect { case (stage, c) if stage.startsWith("4_split_") => c }
+    assert(n("1_total") >= n("2_quality") && n("2_quality") >= n("3_dedup"), s"funnel: $n")
+    assert(splits.nonEmpty && splits.sum == n("3_dedup"), s"funnel: $n")
+  }
 }

@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.stream.WindowedAggs
+import graft.queries.Ingest.memoryRoundtrip
 
 /** Event-time streaming semantics over MemoryStream-driven queries:
   * watermarked tumbling windows with late-data drop, session windows,
-  * within-watermark dedup, custom keyed state.
+  * within-watermark dedup, custom keyed state. Every memory-sink run goes
+  * through `Ingest.memoryRoundtrip`, so each sink has a fresh name and its
+  * query is stopped and its view dropped also when a step fails.
   */
 class StreamingOpsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.engine.Sessions.local(4, "graft-test")
@@ -24,26 +27,30 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Ev]
-    val q = WindowedAggs.tumblingCounts(in.toDF(), "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("tumbling").outputMode("append").start()
-
     in.addData(
       Ev(1, ts("2024-01-01 10:05:00"), 1, "click", 1.0),
       Ev(2, ts("2024-01-01 10:45:00"), 1, "click", 2.0),
       Ev(3, ts("2024-01-01 11:10:00"), 2, "view", 3.0))
-    q.processAllAvailable()
-    // advance watermark far enough to close the 10:00 and 11:00 windows
-    in.addData(Ev(4, ts("2024-01-01 14:00:00"), 1, "click", 1.0))
-    q.processAllAvailable()
-    // this event is 3h older than the max seen ts: beyond the 2h watermark
-    in.addData(Ev(5, ts("2024-01-01 10:30:00"), 1, "click", 100.0))
-    q.processAllAvailable()
-    // close everything remaining
-    in.addData(Ev(6, ts("2024-01-01 23:00:00"), 1, "click", 1.0))
-    q.processAllAvailable()
-    q.stop()
+    val sink = memoryRoundtrip(spark,
+        WindowedAggs.tumblingCounts(in.toDF(), "1 hour", "2 hours"), "append") { q =>
+      q.processAllAvailable()
+      // advance watermark far enough to close the 10:00 and 11:00 windows
+      in.addData(Ev(4, ts("2024-01-01 14:00:00"), 1, "click", 1.0))
+      q.processAllAvailable()
+      // the harness runs no no-data batches, and a batch judges lateness
+      // by the previous batch's watermark: one more data batch brings
+      // the late-row watermark to 12:00
+      in.addData(Ev(7, ts("2024-01-01 14:05:00"), 2, "view", 1.0))
+      q.processAllAvailable()
+      // this event is 3h older than the max seen ts: beyond the 2h watermark
+      in.addData(Ev(5, ts("2024-01-01 10:30:00"), 1, "click", 100.0))
+      q.processAllAvailable()
+      // close everything remaining
+      in.addData(Ev(6, ts("2024-01-01 23:00:00"), 1, "click", 1.0))
+      q.processAllAvailable()
+    }
 
-    val out = spark.table("tumbling").collect()
+    val out = sink.collect()
       .map(r => (r.getAs[Timestamp]("window_start").toString, r.getAs[String]("event_type"), r.getAs[Long]("n")))
     // the late row (event 5) must NOT appear anywhere: 10:00 click stays n=2
     assert(out.contains(("2024-01-01 10:00:00.0", "click", 2L)))
@@ -55,19 +62,22 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Ev]
-    val q = WindowedAggs.userSessions(in.toDF(), "30 minutes", "2 hours")
-      .writeStream.format("memory").queryName("sessions").outputMode("append").start()
-
     in.addData(
       Ev(1, ts("2024-01-01 09:00:00"), 7, "click", 0),
       Ev(2, ts("2024-01-01 09:10:00"), 7, "click", 0), // same session
       Ev(3, ts("2024-01-01 10:30:00"), 7, "click", 0)) // gap > 30m: new session
-    q.processAllAvailable()
-    in.addData(Ev(4, ts("2024-01-01 20:00:00"), 8, "click", 0)) // advance watermark
-    q.processAllAvailable()
-    q.stop()
+    val sink = memoryRoundtrip(spark,
+        WindowedAggs.userSessions(in.toDF(), "30 minutes", "2 hours"), "append") { q =>
+      q.processAllAvailable()
+      in.addData(Ev(4, ts("2024-01-01 20:00:00"), 8, "click", 0)) // advance watermark
+      q.processAllAvailable()
+      // no no-data batches in the harness: this batch runs under the
+      // advanced watermark and closes user 7's sessions
+      in.addData(Ev(5, ts("2024-01-01 20:05:00"), 8, "click", 0))
+      q.processAllAvailable()
+    }
 
-    val sessions = spark.table("sessions").where("user_id = 7")
+    val sessions = sink.where("user_id = 7")
       .collect().map(_.getAs[Long]("n_events")).sorted
     assert(sessions.sameElements(Array(1L, 2L)))
   }
@@ -76,19 +86,18 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Ev]
-    val q = WindowedAggs.dedupWithinWatermark(in.toDF(), "1 hour")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-
     in.addData(
       Ev(1, ts("2024-01-01 09:00:00"), 1, "click", 0),
       Ev(1, ts("2024-01-01 09:00:10"), 1, "click", 0), // duplicate id within horizon
       Ev(2, ts("2024-01-01 09:05:00"), 1, "click", 0))
-    q.processAllAvailable()
-    in.addData(Ev(1, ts("2024-01-01 09:10:00"), 1, "click", 0)) // still within horizon
-    q.processAllAvailable()
-    q.stop()
+    val sink = memoryRoundtrip(spark,
+        WindowedAggs.dedupWithinWatermark(in.toDF(), "1 hour"), "append") { q =>
+      q.processAllAvailable()
+      in.addData(Ev(1, ts("2024-01-01 09:10:00"), 1, "click", 0)) // still within horizon
+      q.processAllAvailable()
+    }
 
-    assert(spark.table("dedup").select("event_id").collect().map(_.getLong(0)).sorted
+    assert(sink.select("event_id").collect().map(_.getLong(0)).sorted
       .sameElements(Array(1L, 2L)))
   }
 
@@ -96,16 +105,15 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[WindowedAggs.UserEvent]
-    val q = WindowedAggs.runningUserCounts(in.toDS())
-      .writeStream.format("memory").queryName("usercounts").outputMode("append").start()
-
     in.addData(WindowedAggs.UserEvent(1, 10), WindowedAggs.UserEvent(1, 11), WindowedAggs.UserEvent(2, 12))
-    q.processAllAvailable()
-    in.addData(WindowedAggs.UserEvent(1, 13))
-    q.processAllAvailable()
-    q.stop()
+    val sink = memoryRoundtrip(spark,
+        WindowedAggs.runningUserCounts(in.toDS()).toDF(), "append") { q =>
+      q.processAllAvailable()
+      in.addData(WindowedAggs.UserEvent(1, 13))
+      q.processAllAvailable()
+    }
 
-    val rows = spark.table("usercounts").collect()
+    val rows = sink.collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events")))
     assert(rows.contains((1L, 2L))) // after batch 1
     assert(rows.contains((2L, 1L)))
@@ -118,24 +126,26 @@ class StreamingOpsSpec extends AnyFunSuite {
     val imps = MemoryStream[(Timestamp, Long)]
     val clicks = MemoryStream[(Timestamp, Long)]
     def src(m: MemoryStream[(Timestamp, Long)]) = m.toDF().toDF("ts", "ad_id")
-    val q = WindowedAggs.adAttribution(src(imps), src(clicks),
-        followWindow = "1 hour", watermark = "2 hours")
-      .writeStream.format("memory").queryName("attrib").outputMode("append").start()
-    try {
-      imps.addData((ts("2024-01-01 00:00:00"), 1L))
+    imps.addData((ts("2024-01-01 00:00:00"), 1L))
+    val sink = memoryRoundtrip(spark, WindowedAggs.adAttribution(src(imps), src(clicks),
+        followWindow = "1 hour", watermark = "2 hours"), "append") { q =>
       q.processAllAvailable()
       // advance BOTH watermarks 10h past ad 1's impression: its buffered
       // state (useful only for clicks <= imp_ts + 1h) is evicted
       imps.addData((ts("2024-01-01 10:00:00"), 2L))
       clicks.addData((ts("2024-01-01 10:00:30"), 2L))
       q.processAllAvailable()
+      // no no-data batches in the harness: this batch (an impression
+      // nothing clicks) runs under the advanced watermarks and evicts
+      imps.addData((ts("2024-01-01 10:01:00"), 3L))
+      q.processAllAvailable()
       // in-range click for ad 1, arriving after eviction: must NOT match
       clicks.addData((ts("2024-01-01 00:30:00"), 1L))
       q.processAllAvailable()
-      val rows = spark.table("attrib").collect()
-      assert(rows.map(_.getLong(0)).toSet == Set(2L),
-        s"evicted impression must not re-match; got ${rows.mkString(",")}")
-    } finally q.stop()
+    }
+    val rows = sink.collect()
+    assert(rows.map(_.getLong(0)).toSet == Set(2L),
+      s"evicted impression must not re-match; got ${rows.mkString(",")}")
   }
 
   test("transformWithState carries ValueState and ListState across batches") {
@@ -149,16 +159,14 @@ class StreamingOpsSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[StatefulProfiles.UserValue]
-      val q = StatefulProfiles.runningProfiles(in.toDS())
-        .toDF().writeStream.format("memory").queryName("tws")
-        .outputMode("update").start()
-      try {
-        in.addData(StatefulProfiles.UserValue(1, 10), StatefulProfiles.UserValue(2, 7))
+      in.addData(StatefulProfiles.UserValue(1, 10), StatefulProfiles.UserValue(2, 7))
+      val sink = memoryRoundtrip(spark,
+          StatefulProfiles.runningProfiles(in.toDS()).toDF(), "update") { q =>
         q.processAllAvailable()
         in.addData(StatefulProfiles.UserValue(1, 4))
         q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("tws").collect()
+      }
+      val rows = sink.collect()
         .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_batches"),
           r.getAs[Long]("n_events"), r.getAs[Long]("sum_value"), r.getAs[Long]("max_value")))
         .toSet
@@ -182,13 +190,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val in = MemoryStream[StatefulProfiles.TimedEvent]
-      val q = StatefulProfiles.idleSessions(in.toDS(), gapMs = 5000L)
-        .toDF().writeStream.format("memory").queryName("tws_timers")
-        .outputMode("append").start()
-      try {
-        // u1 deadline 2000+5000, u2 deadline 1500+5000
-        in.addData(StatefulProfiles.TimedEvent(1, 1000),
-          StatefulProfiles.TimedEvent(1, 2000), StatefulProfiles.TimedEvent(2, 1500))
+      // u1 deadline 2000+5000, u2 deadline 1500+5000
+      in.addData(StatefulProfiles.TimedEvent(1, 1000),
+        StatefulProfiles.TimedEvent(1, 2000), StatefulProfiles.TimedEvent(2, 1500))
+      val sink = memoryRoundtrip(spark,
+          StatefulProfiles.idleSessions(in.toDS(), gapMs = 5000L).toDF(), "append") { q =>
         q.processAllAvailable()
         // raises max event time to 50000; watermark DURING this batch is
         // still 2000 (previous batch's max), so no timer fires yet
@@ -197,8 +203,8 @@ class StreamingOpsSpec extends AnyFunSuite {
         // this batch runs under watermark 50000: both idle timers fire
         in.addData(StatefulProfiles.TimedEvent(3, 100000))
         q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("tws_timers").collect()
+      }
+      val rows = sink.collect()
         .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("n_events"),
           r.getAs[Long]("closed_at_ms"))).toSet
       assert(rows == Set((1L, 2L, 7000L), (2L, 1L, 6500L)),
