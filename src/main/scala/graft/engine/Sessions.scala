@@ -23,10 +23,13 @@ object Sessions {
   /** Point JVM-local scratch (shuffle/spill files, streaming checkpoint
     * base) at the RAM disk when one is mounted and the caller hasn't
     * chosen otherwise. Local-mode ergonomics for the bench/verify mains:
-    * micro-batch commits fsync per state store per batch, and on a
-    * disk-backed /tmp that fixed cost lands on every streaming
-    * roundtrip. A cluster deployment sets spark.local.dir to NVMe
-    * explicitly and always passes real checkpoint locations. Must run
+    * every micro-batch creates and renames small files per state store
+    * and per log (state delta, offset and commit entries, each with its
+    * `.crc`). None is fsynced (Spark calls no `hsync` on them), but on a
+    * disk-backed /tmp each is still a metadata write on the streaming
+    * roundtrip's critical path. A cluster deployment sets
+    * spark.local.dir to NVMe explicitly and always passes real
+    * checkpoint locations. Must run
     * BEFORE the SparkContext starts (spark.local.dir is read once).
     */
   def preferShmScratch(): Unit = {
@@ -78,6 +81,15 @@ object Sessions {
     * [[graft.functions.GraftExtensions]] when the session is created; a
     * later call returns the same session (`getOrCreate`), so they are
     * installed once per session.
+    *
+    * `file:` paths go through [[graft.engine.util.LocalFs]]'s classes
+    * (set as `spark.hadoop.*`, so the session's Hadoop conf, its write
+    * tasks and its streaming checkpoints all get them): Hadoop's local
+    * filesystem without a `chmod`/`readlink` child process per file.
+    * Hadoop caches one `FileSystem` per scheme and user, and its cache
+    * key ignores the conf: a `file:` FileSystem fetched with a plain
+    * `new Configuration()` before the first `local` call stays the stock
+    * class for the JVM. LocalFsSpec checks the installed classes.
     */
   def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
@@ -85,6 +97,8 @@ object Sessions {
       .master(s"local[$cpus]")
       .appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)
+      .config(graft.engine.util.LocalFs.HadoopConfs
+        .map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

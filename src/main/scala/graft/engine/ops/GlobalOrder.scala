@@ -326,8 +326,10 @@ object GlobalOrder {
     * rows (each bucket's LAST row) take their successor from the next
     * non-empty bucket's FIRST row — one boundary row exchanged per
     * bucket, never a global sort. The globally last row keeps NULL
-    * leads, exactly as the single-task window would. Appends
-    * `<col><suffix>` for each lead column. Lead columns must be atomic
+    * leads, exactly as the single-task window would. Rows tied on
+    * (key, ties...) are ordered by the lead columns, so the result is the
+    * global lead over (key, ties..., leadCols...) whatever the ties.
+    * Appends `<col><suffix>` for each lead column. Lead columns must be atomic
     * (numeric, string, boolean, date, timestamp); an array or struct
     * column throws IllegalArgumentException.
     */
@@ -365,21 +367,25 @@ object GlobalOrder {
         case _ => false
       }, s"lead1: lead column '$c' has non-atomic type ${dt.simpleString}")
     }
-    val wloc = Window.partitionBy(col("_gb")).orderBy(sort: _*)
+    // the lead columns extend the order, so tied sort tuples resolve
+    // the same way in the window and in the seam's min_by: the result
+    // is a global lead() over (sort ++ leadCols)
+    val order = sort ++ leadCols.map(col)
+    val wloc = Window.partitionBy(col("_gb")).orderBy(order: _*)
     // SINGLE-PASS seam patch (r18, guide §5/§2.4):
     // each bucket's first row — the value the previous bucket's LAST row
-    // needs as its lead — is min_by over the sort tuple on the PRE-window
+    // needs as its lead — is min_by over the order tuple on the PRE-window
     // frame, one bounded collect; the seam substitution is then a
     // row-local literal CASE evaluated only on seam rows. The old shape
     // checkpointed the whole WINDOWED frame (at the 300x suffix corpus a
     // multi-GB materialization) and re-read it three times through a
     // union + broadcast join. min_by's struct ordering is ascending
-    // lexicographic — exactly the orderBy(sort) contract (all helpers
+    // lexicographic — exactly the orderBy(order) contract (all helpers
     // pass plain ascending columns; a SortOrder inside struct() fails
     // analysis loudly, never silently misorders).
     val firstRows = bdf
       .groupBy(col("_gb").cast("long").as("_gbl"))
-      .agg(min_by(struct(leadCols.map(col): _*), struct(sort: _*)).as("_gfx"))
+      .agg(min_by(struct(leadCols.map(col): _*), struct(order: _*)).as("_gfx"))
       .collect().map(r => (r.getLong(0), r.getStruct(1))).toSeq.sortBy(_._1)
     // bucket -> the NEXT non-empty bucket's first row (empty buckets
     // have no seam rows, so consecutive-present pairing bridges them);
@@ -395,11 +401,13 @@ object GlobalOrder {
         b -> row.filterNot(_.isNullAt(j)).fold(none)(r => lit(r.get(j)).cast(dt))
       }, none, label)
     }
-    val withSent = bdf.withColumn("_ghn", lead(lit(1), 1).over(wloc))
-    leadCols.zipWithIndex.foldLeft(withSent) { case (b, (c, j)) =>
-      b.withColumn(c + suffix,
+    // all lead columns in one projection (a withColumn per column
+    // re-analyses the growing plan once per column)
+    bdf.withColumn("_ghn", lead(lit(1), 1).over(wloc))
+      .select(col("*") +: leadCols.zipWithIndex.map { case (c, j) =>
         when(col("_ghn").isNotNull, lead(col(c), 1).over(wloc))
-          .otherwise(patchFor(c, j)))
-    }.drop("_gok", "_gb", "_ghn")
+          .otherwise(patchFor(c, j)).as(c + suffix)
+      }: _*)
+      .drop("_gok", "_gb", "_ghn")
   }
 }

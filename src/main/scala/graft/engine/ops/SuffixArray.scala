@@ -204,7 +204,6 @@ object SuffixArray {
     val enc = pos0.join(broadcast(dict), "w").drop("w")
       .withColumnRenamed("_wrk", "rk")
       .localCheckpoint()
-    val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     val bpc = (64 - java.lang.Long.numberOfLeadingZeros(v)).toInt
     val npg = math.max(1, 63 / bpc)
     def packGroups(comps: Seq[org.apache.spark.sql.Column]) =
@@ -218,20 +217,15 @@ object SuffixArray {
     // good as the corpus and keeps pass 1 to ONE full lead-window
     // execution; sampling rows instead would corrupt the leads)
     val nMini = math.min(npg, nComp)
-    var mini = enc.where(pmod(col("doc_id"), lit(10)) === 0)
-    for (i <- 1 until nMini)
-      mini = mini.withColumn(s"_rkb$i",
-        coalesce(lead(col("rk"), i).over(wdoc), lit(0L)))
+    val mini = withLeads(enc.where(pmod(col("doc_id"), lit(10)) === 0),
+      col("rk"), 1 until nMini, lit(0L))
     val miniComps = col("rk") +: (1 until nMini).map(i => col(s"_rkb$i"))
     // exact sketch in ONE job: the mini frame is already a 10% subset,
     // so longBoundaries' sample-then-fallback would only add a second
     // window execution (its fallback always fires at gate-corpus sizes)
     val bnds = DriverLit.boundaries(
       mini.select(packGroups(miniComps).head.as("_pk")), col("_pk"), passFan(enc))
-    var paired = enc
-    for (i <- 1 until nComp)
-      paired = paired.withColumn(s"_rkb$i",
-        coalesce(lead(col("rk"), i).over(wdoc), lit(0L)))
+    val paired = withLeads(enc, col("rk"), 1 until nComp, lit(0L))
     val packs = packGroups(
       col("rk") +: (1 until nComp).map(i => col(s"_rkb$i")))
     val m = packs.size
@@ -345,15 +339,11 @@ object SuffixArray {
       firstSentinel: org.apache.spark.sql.Column,
       initClasses: Long, initMax: Long): DataFrame = {
     val bnd = math.min(math.max(boundRound, 0), rounds)
-    val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     // advance up to ×16 in pass 1, but land exactly on the bound span
     // so rk_bound is the tuple-prefix rank of this same pass
     val stepLog = math.min(4, if (bnd > 0) bnd else rounds)
     val nLead = (1 << stepLog) - 1
-    var paired = cur0
-    for (i <- 1 to nLead)
-      paired = paired.withColumn(s"_rkb$i",
-        coalesce(lead(col(firstKey), i).over(wdoc), firstSentinel))
+    val paired = withLeads(cur0, col(firstKey), 1 to nLead, firstSentinel)
     val rkbCols = (1 to nLead).map(i => col(s"_rkb$i"))
     val keys = col(firstKey) +: rkbCols
     val mx = math.max(initMax, 1L)
@@ -390,6 +380,18 @@ object SuffixArray {
     refineFrom(cur2, stepLog, rounds, bnd, frozen, totalRows, stable)
   }
 
+  /** `df` plus `_rkb1`, `_rkb2`, ...: the per-doc lead of `src` at each
+    * of `offsets` (`default` past the doc's end), in ONE projection — a
+    * withColumn per lead re-analyses the growing plan once per column.
+    */
+  private def withLeads(df: DataFrame, src: org.apache.spark.sql.Column,
+      offsets: Seq[Int], default: org.apache.spark.sql.Column): DataFrame = {
+    val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
+    df.select(col("*") +: offsets.zipWithIndex.map { case (o, i) =>
+      coalesce(lead(src, o).over(wdoc), default).as(s"_rkb${i + 1}")
+    }: _*)
+  }
+
   /** Row-count offset stitch for a pass-1 `local` frame (bucketed rank
     * + class size, checkpointed): with rank() semantics the stitch adds
     * the number of rows in earlier buckets (all strictly smaller — the
@@ -424,7 +426,6 @@ object SuffixArray {
     */
   private def refineFrom(cur0: DataFrame, startSpanLog: Int, rounds: Int,
       bnd: Int, frozen0: Boolean, totalRows: Long, stable0: Boolean): DataFrame = {
-    val wdoc = Window.partitionBy(col("doc_id")).orderBy(col("p"))
     var cur = cur0
     var spanLog = startSpanLog
     var frozen = frozen0
@@ -435,10 +436,8 @@ object SuffixArray {
         (if (!frozen && bnd > spanLog) bnd else rounds) - spanLog)
       val step = 1L << spanLog
       val nLead = (1 << stepLog) - 1
-      var paired = cur
-      for (i <- 1 to nLead)
-        paired = paired.withColumn(s"_rkb$i",
-          coalesce(lead(col("rk"), (i * step).toInt).over(wdoc), lit(-1L)))
+      val paired = withLeads(cur, col("rk"), (1 to nLead).map(i => (i * step).toInt),
+        lit(-1L))
       val rkbCols = (1 to nLead).map(i => col(s"_rkb$i"))
       val freezeNow = !frozen && spanLog + stepLog == bnd
       val wcls = Window.partitionBy(col("rk")).orderBy(rkbCols: _*)

@@ -272,16 +272,20 @@ object Ingest extends QueryPack {
     val prevNd = s.conf.get(ndKey)
     s.conf.set(key,
       s.conf.getOption("spark.graft.stream.statePartitions").getOrElse("1"))
-    // Every micro-batch costs ~0.5s of fixed orchestration in this runtime:
-    // addBatch ~0.4s (state load + commit + the operator, ~0.25s inside
-    // tasks, the rest physical planning and job turnaround outside them),
-    // incremental queryPlanning ~0.1s, WAL + offsets ~0.08s. No conf
-    // moves that floor — state-store maintenance interval, retained
-    // batches, RocksDB with join state format 3, codegen, compression
-    // codec and a checksum-free local FS all measured as noise — so batch
-    // COUNT is the only lever. Each processAllAvailable call's trailing
-    // no-data batch would roughly double a roundtrip's cost while
-    // computing nothing, so they are disabled here; queries whose APPEND
+    // Every micro-batch pays fixed orchestration in this runtime:
+    // addBatch (state load + commit + the operator inside tasks, physical
+    // planning and job turnaround outside them), incremental
+    // queryPlanning, and the WAL and offset commits. Those two commits
+    // cost ~30 ms each while Hadoop started a chmod/readlink process per
+    // checkpoint file; on the engine's `file:` classes
+    // (graft.engine.util.LocalFs, installed by Sessions.local) they are
+    // a few ms. ROADMAP G keeps the traced per-component table. The
+    // state-store maintenance interval, retained batches, RocksDB with
+    // join state format 3, codegen and the compression codec measured
+    // as noise, so batch COUNT is the remaining lever. Each
+    // processAllAvailable call's trailing no-data batch would roughly
+    // double a roundtrip's cost while computing nothing, so they are
+    // disabled here; queries whose APPEND
     // output only materializes when the watermark advances (session /
     // two-level windows, outer joins) carry an explicit flush DATA batch
     // instead — it executes under the watermark the previous batch

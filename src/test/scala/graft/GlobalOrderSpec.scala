@@ -144,6 +144,27 @@ class GlobalOrderSpec extends AnyFunSuite {
     assert(got.where(col("id_nx").isNull).count() == 1)
   }
 
+  test("lead1 resolves tied sort tuples by the lead columns, across bucket seams") {
+    // 40 key groups of 3 rows tied on k, each arriving in DESCENDING v
+    // order in one partition: the first row seen is the one a tie-blind
+    // order keeps, and it is the wrong successor for the previous group
+    import spark.implicits._
+    val df = (0 until 40).flatMap { k =>
+      (0 until 3).map(j => (3L * k + j, k.toLong, 3L * k + 2 - j))
+    }.toDF("id", "k", "v").coalesce(1)
+    val w = Window.orderBy(col("k"), col("v"), col("id"))
+    val want = df
+      .withColumn("v_nx", lead(col("v"), 1).over(w))
+      .withColumn("id_nx", lead(col("id"), 1).over(w))
+    // a caller bucket of ten keys: each seam's successor group is tied
+    val gotWith = GlobalOrder.lead1With(df, col("k") / 10L, Seq(col("k")), Seq("v", "id"))
+    assert(collectSorted(gotWith, "id") == collectSorted(want, "id"), "lead1With")
+    atFan(8) {
+      val got = GlobalOrder.lead1(df, col("k"), Nil, Seq("v", "id"))
+      assert(collectSorted(got, "id") == collectSorted(want, "id"), "lead1")
+    }
+  }
+
   test("lead1 carries NULL lead-column values through seam patching") {
     // a lead column that is itself NULL must not be confused with "no
     // successor" — the _ghn sentinel, not the lead value, marks seams
